@@ -26,6 +26,10 @@ Method:
        host multiplier  = prior-code-today / prior-round record
        code delta       = current-code-today / prior-code-today
      and write the full per-query table as JSON.
+  4. A query with a failed rep (Bench's -1.0) in either tree is listed
+     in `failed_prior` / `failed_current`, not silently dropped; the
+     script exits 1 when the current tree fails a query the prior tree
+     passed.
 
 Usage:
   python3 scripts/ab_probe.py <prior_commit> <prior_record.json> \
@@ -119,6 +123,7 @@ def main():
 
     load_before = loadavg()
     mins = {prior: {}, cur: {}}
+    failed = {prior: set(), cur: set()}
     for rep in range(args.reps):
         for tree in (prior, cur):  # interleaved: host drift hits both
             qs = bench_once(tree, args.sf)
@@ -126,6 +131,11 @@ def main():
                 if t >= 0:
                     prev = mins[tree].get(q)
                     mins[tree][q] = t if prev is None else min(prev, t)
+                else:
+                    failed[tree].add(q)
+    # a query the prior tree ran cleanly every rep and the current tree
+    # failed at least once
+    regressed = sorted((set(mins[prior]) - failed[prior]) & failed[cur])
 
     rows, host_ms, code_ms = {}, [], []
     for q in sorted(set(record) & set(mins[prior]) & set(mins[cur])):
@@ -143,6 +153,8 @@ def main():
         "prior_commit": short, "reps": args.reps, "sf": args.sf,
         "loadavg_before": load_before, "loadavg_after": loadavg(),
         "queries_compared": len(rows),
+        "failed_prior": sorted(failed[prior]),
+        "failed_current": sorted(failed[cur]),
         "host_multiplier_median": round(statistics.median(host_ms), 2) if host_ms else None,
         "code_delta_median": round(statistics.median(code_ms), 2) if code_ms else None,
         "reading": ("medians over ALL shared queries; host_multiplier ~1.0 = calm "
@@ -169,6 +181,10 @@ def main():
     print(f"\n{len(rows)} queries; host multiplier median "
           f"{out['host_multiplier_median']}, code delta median "
           f"{out['code_delta_median']}{pct} -> {args.out}")
+    print(f"failed_prior: {out['failed_prior']}")
+    print(f"failed_current: {out['failed_current']}")
+    if regressed:
+        sys.exit(f"current tree fails queries the prior tree passed: {regressed}")
 
 
 if __name__ == "__main__":

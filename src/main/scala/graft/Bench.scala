@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",
-  * "queries":{...},"reps":R,"sf":...}.
+  * "queries":{...},"failed":[...],"reps":R,"sf":...}. A query with a
+  * failed rep reports -1.0 in "queries", is named in "failed" and is
+  * left out of the total.
   *
   * Each query is forced through a noop sink (full materialization of every
   * output column) rather than count() — count lets Spark skip column
@@ -91,9 +93,11 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
     val loadAfter = loadavg()
     val sweep = sweepAtStart || sweepRunning()
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$reps,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","oracle_sweep_running":$sweep}"""
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"reps":$reps,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","oracle_sweep_running":$sweep}"""
     println(line)
     // also persist the record to a file: the driver captures stdout via a
     // bounded tail, and a long per-query map has been truncated there once

@@ -16,7 +16,6 @@ object Verify {
     val spark = graft.core.GraftSession
       .builder("graft-verify", s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
-    graft.core.GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

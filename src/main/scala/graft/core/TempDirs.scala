@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 /** JVM-scoped temp-dir registry for query/harness scratch tables.
   *
-  * Lifecycle-feature queries (k11+…k40) and the scale smokes build
+  * Lifecycle-feature queries (k11+…k40) and the ScaleStep harness build
   * REAL manifest tables as inputs — at sf100-equivalent a single
   * ScaleStep repetition of k31/k32/k35 materializes tens of GB under
   * `java.io.tmpdir`, and `Files.createTempDirectory` alone never

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet, CommonExpressionRef, Expression, SubqueryExpression, With}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan, MergeIntoTable, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -81,14 +81,30 @@ private[plans] object RowLevelTranslate {
       s"graft catalog $stmt: subqueries in conditions/assignments are not " +
         "supported — materialize the subquery into a source and use MERGE")
 
-  /** A resolved expression over TARGET attributes, un-resolved back to a
-    * name-based Column the mutator re-resolves against its own scan. */
-  def targetColumn(e: Expression, stmt: String): Column = {
+  /** A resolved expression un-resolved back to a name-based Column the
+    * mutator re-resolves against its own scan, each attribute renamed by
+    * `name`. `With` scopes (BETWEEN's replacement binds its input once)
+    * inline first: a definition over un-resolved attributes has no type,
+    * and re-resolving the scope asks it for one. */
+  private def unresolve(e: Expression, stmt: String)
+                       (name: AttributeReference => String): Column = {
     checkNoSubquery(e, stmt)
-    ColumnExpr.column(e.transform {
-      case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
+    val inlined = e.transformUp {
+      case w: With =>
+        require(w.defs.forall(_.child.deterministic),
+          s"graft catalog $stmt: a non-deterministic BETWEEN/common " +
+            "expression cannot be translated")
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transform { case r: CommonExpressionRef => defs(r.id) }
+    }
+    ColumnExpr.column(inlined.transform {
+      case a: AttributeReference => UnresolvedAttribute(Seq(name(a)))
     })
   }
+
+  /** A resolved expression over TARGET attributes. */
+  def targetColumn(e: Expression, stmt: String): Column =
+    unresolve(e, stmt)(_.name)
 
   def targetAssignments(assignments: Seq[Assignment],
                         stmt: String): Map[String, Column] = {
@@ -108,17 +124,15 @@ private[plans] object RowLevelTranslate {
   /** An expression over target + source attributes, source references
     * rewritten onto the manifest merge's `_src_` join seam. */
   private def mergeColumn(e: Expression, sourceAttrs: AttributeSet,
-                          branch: String, allowSource: Boolean): Column = {
-    checkNoSubquery(e, "MERGE")
-    ColumnExpr.column(e.transform {
-      case a: AttributeReference if sourceAttrs.contains(a) =>
+                          branch: String, allowSource: Boolean): Column =
+    unresolve(e, "MERGE") { a =>
+      if (sourceAttrs.contains(a)) {
         require(allowSource,
           s"graft catalog MERGE: $branch cannot reference the source " +
             s"(got ${a.name}) — no source row exists on that branch")
-        UnresolvedAttribute(Seq("_src_" + a.name))
-      case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
-    })
-  }
+        "_src_" + a.name
+      } else a.name
+    }
 
   /** A bare column reference, possibly under the LOSSLESS widening cast
     * the analyzer inserts to reconcile key types (`ON t.k = s.k` with a

@@ -1030,8 +1030,9 @@ object ManifestTable {
   /** Rows-per-commit floor for the AUTOMATIC sketches: a commit whose
     * new files total fewer live rows skips the sketch job. The sketch
     * pass costs a flat ~0.5 s of Spark job overhead regardless of size
-    * (NdvSmoke) — fine amortized over a batch INSERT, a per-micro-batch
-    * tax on a streaming sink committing every few seconds. Consequence,
+    * (SCALE_SMOKE.md, Round 17 ndv sketches) — fine amortized over a
+    * batch INSERT, a per-micro-batch tax on a streaming sink committing
+    * every few seconds. Consequence,
     * stated honestly: the optimizer's ndv fold is COVERAGE-weighted
     * (GraftColumnStats) — sketch-less files holding ≤ 5% of live rows
     * ride along (the union understates ndv, the safe error direction),
@@ -1267,8 +1268,8 @@ object ManifestTable {
     * dwarfs the statistic it restores. Backfill reads the unsketched
     * files once and writes nothing but a manifest, so a streaming table
     * fed by thousands of micro-commits regains CBO ndv at the cost of
-    * one scan of its unsketched slice (NdvSmoke measures backfill vs
-    * OPTIMIZE).
+    * one scan of its unsketched slice (SCALE_SMOKE.md, "Round 19:
+    * coverage restore", measures backfill vs OPTIMIZE).
     *
     * Sketches attach only where the file already carries footer stats
     * for the column (the [[attachNdvSketches]] contract — dir-valued
@@ -3014,7 +3015,7 @@ object ManifestTable {
     * re-infers it with a footer-reading Spark JOB on EVERY DataFrame
     * construction (~0.12-0.2 s + one hadoop-conf broadcast per
     * generation per read at sf0.1; a lifecycle query constructs reads
-    * dozens of times — measured r20, ReadProbe). The memo holds the FULL
+    * dozens of times — measured r20, OPTIMIZATION_r20.md). The memo holds the FULL
     * constructed frame schema — data columns plus string-pinned
     * partition columns — so a hit passes it as the user-specified
     * schema: no inference job, and partition column types are pinned by

@@ -138,8 +138,9 @@ class ColumnStatsSpec extends SparkSpec {
 
   test("auto ndv sketches throttle on micro-commits; the floor never skips batch commits") {
     // the sketch job costs a flat ~0.5 s regardless of commit size
-    // (NdvSmoke) — a deliberate batch tax, but a streaming sink
-    // committing every few seconds must not pay it per micro-batch.
+    // (SCALE_SMOKE.md, Round 17 ndv sketches) — a deliberate batch tax,
+    // but a streaming sink committing every few seconds must not pay it
+    // per micro-batch.
     // Below the rows-per-commit floor the AUTO sketches skip; explicit
     // stats.ndv.cols opt-ins and above-floor commits are untouched.
     val n = "cstat_" + java.util.UUID.randomUUID().toString.take(8)
@@ -176,6 +177,11 @@ class ColumnStatsSpec extends SparkSpec {
       assert(zeroFloorNew.nonEmpty &&
         zeroFloorNew.forall(_.stats.get("s").exists(_.ndv.isDefined)),
         "minRows=0 must sketch every commit")
+      // OPTIMIZE restores coverage: its rewrite is ONE above-floor
+      // commit, so the compacted micro-commit rows come back sketched
+      spark.sql(s"GRAFT OPTIMIZE graft_lake.$n.m")
+      assert(files.forall(_.stats.get("s").exists(_.ndv.isDefined)),
+        "an above-floor OPTIMIZE rewrite must re-sketch the micro-commit rows")
     } finally {
       spark.sql(s"DROP TABLE graft_lake.$n.m")
       spark.sql(s"DROP NAMESPACE graft_lake.$n")

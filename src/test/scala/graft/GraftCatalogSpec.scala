@@ -22,6 +22,23 @@ class GraftCatalogSpec extends SparkSpec {
       .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(Array(n), table))
       .properties().get("location")
 
+  test("tune() restores the builder's session posture, catalog binding included") {
+    import graft.core.GraftSession
+    val built = GraftSession.sessionConfs.map { case (k, _) => k -> spark.conf.get(k) }
+    assert(built == GraftSession.sessionConfs)
+    try {
+      built.foreach { case (k, _) => spark.conf.unset(k) }
+      assert(!spark.conf.getOption("spark.sql.cbo.enabled").contains("true"))
+      GraftSession.tune(spark)
+      built.foreach { case (k, v) =>
+        assert(spark.conf.getOption(k).contains(v), s"tune() left $k unset")
+      }
+      val n = ns()
+      spark.sql(s"CREATE NAMESPACE graft_lake.$n")
+      spark.sql(s"DROP NAMESPACE graft_lake.$n")
+    } finally built.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("CREATE TABLE / INSERT INTO / SELECT round-trips with layout intact") {
     val n = ns()
     spark.sql(s"CREATE NAMESPACE graft_lake.$n")
@@ -186,28 +203,41 @@ class GraftCatalogSpec extends SparkSpec {
   test("native ANSI UPDATE / complex DELETE / MERGE INTO on catalog tables") {
     val n = ns()
     spark.sql(s"CREATE NAMESPACE graft_lake.$n")
-    Seq((1L, "aa", 10.0), (2L, "bb", 20.0), (3L, "cc", 30.0), (4L, "dd", 40.0))
-      .toDF("k", "s", "v").createOrReplaceTempView("dml_seed")
+    Seq((1L, "aa", 10.0), (2L, "bb", 20.0), (3L, "cc", 30.0), (4L, "dd", 40.0),
+      (5L, "ee", 50.0)).toDF("k", "s", "v").createOrReplaceTempView("dml_seed")
     spark.sql(s"CREATE TABLE graft_lake.$n.t AS SELECT * FROM dml_seed")
 
     // UPDATE: expression over the old row, arbitrary predicate
     spark.sql(s"UPDATE graft_lake.$n.t SET v = v * 10 WHERE k <= 2")
     assert(spark.sql(s"SELECT v FROM graft_lake.$n.t ORDER BY k")
-      .as[Double].collect().toSeq == Seq(100.0, 200.0, 30.0, 40.0))
+      .as[Double].collect().toSeq == Seq(100.0, 200.0, 30.0, 40.0, 50.0))
+    // BETWEEN analyzes to a common-expression scope (its input bound
+    // once); the translation must carry it, numeric and string alike
+    spark.sql(s"UPDATE graft_lake.$n.t SET v = v + 1 WHERE k BETWEEN 1 AND 1")
+    assert(spark.sql(s"SELECT v FROM graft_lake.$n.t ORDER BY k")
+      .as[Double].collect().toSeq == Seq(101.0, 200.0, 30.0, 40.0, 50.0))
+    spark.sql(s"UPDATE graft_lake.$n.t SET v = v - 1 WHERE s BETWEEN 'aa' AND 'ab'")
+    assert(spark.sql(s"SELECT v FROM graft_lake.$n.t ORDER BY k")
+      .as[Double].collect().toSeq == Seq(100.0, 200.0, 30.0, 40.0, 50.0))
 
     // DELETE with a predicate NO source filter can express — the rewrite
     // path takes the whole expression, not just convertible conjuncts
     spark.sql(s"DELETE FROM graft_lake.$n.t WHERE upper(s) = 'DD'")
     assert(spark.sql(s"SELECT k FROM graft_lake.$n.t ORDER BY k")
+      .as[Long].collect().toSeq == Seq(1L, 2L, 3L, 5L))
+    spark.sql(s"DELETE FROM graft_lake.$n.t WHERE k BETWEEN 4 AND 5")
+    assert(spark.sql(s"SELECT k FROM graft_lake.$n.t ORDER BY k")
       .as[Long].collect().toSeq == Seq(1L, 2L, 3L))
 
     // MERGE with a differently-named source key, arithmetic over both
-    // sides, and a BY SOURCE branch
+    // sides, and a BY SOURCE branch; BETWEEN clause conditions over the
+    // source (matched) and the target (by source)
     Seq((2L, 5.0), (9L, 90.0)).toDF("kk", "w").createOrReplaceTempView("dml_src")
     spark.sql(
       s"""MERGE INTO graft_lake.$n.t t USING dml_src s ON t.k = s.kk
-         |WHEN MATCHED THEN UPDATE SET v = t.v + s.w
-         |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = t.v * -1.0""".stripMargin)
+         |WHEN MATCHED AND s.w BETWEEN 0 AND 10 THEN UPDATE SET v = t.v + s.w
+         |WHEN NOT MATCHED BY SOURCE AND t.k BETWEEN 1 AND 3
+         |  THEN UPDATE SET v = t.v * -1.0""".stripMargin)
     assert(spark.sql(s"SELECT k, v FROM graft_lake.$n.t ORDER BY k")
       .as[(Long, Double)].collect().toSeq ==
       Seq((1L, -100.0), (2L, 205.0), (3L, -30.0)))

@@ -49,11 +49,19 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("tt")
       .select(date_format($"window_start", "HH:mm").as("w"), $"token", $"n")
       .as[(String, String, Long)].collect().toSet
+    // twelve more one-minute windows of three tokens: state stays within
+    // the watermark horizon (at most 5 windows), not the 36 rows of the run
+    (20 until 32).foreach { m =>
+      input.addData((t(f"2024-01-01 00:$m%02d:30"), 10L + m, "red green blue"))
+      q.processAllAvailable()
+    }
+    val peak = q.recentProgress.map(_.stateOperators.map(_.numRowsTotal).sum).max
     q.stop()
     assert(got.contains(("00:00", "spark", 3L))) // two docs, three occurrences
     assert(got.contains(("00:00", "joins", 1L)))
     assert(got.contains(("00:01", "spark", 1L)))
     assert(!got.exists(_._2 == "a")) // min length gate before state
+    assert(peak > 0 && peak <= 5 * 3, s"peak state rows $peak")
   }
 
   test("attributionJoin matches right events inside the horizon, both streams") {
@@ -78,10 +86,24 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("attr")
       .select($"ts", $"value", $"lag_seconds")
       .as[(java.sql.Timestamp, Double, Long)].collect().toSet
+    // twelve more hours, one view and one click 5 minutes later each:
+    // every pair matches, and both sides' state stays within watermark +
+    // horizon (~2 hours of rows per side plus the opening batch), not
+    // the 29 rows of the run
+    (1 to 12).foreach { h =>
+      views.addData((t(f"2024-01-01 $h%02d:00:00"), 100L + h, 1000.0 + h))
+      clicks.addData((t(f"2024-01-01 $h%02d:05:00"), 100L + h))
+      q.processAllAvailable()
+    }
+    val hourly = spark.table("attr").filter($"value" > 1000.0)
+      .select($"lag_seconds").as[Long].collect().toSeq
+    val peak = q.recentProgress.map(_.stateOperators.map(_.numRowsTotal).sum).max
     q.stop()
     assert(got == Set(
       (t("2024-01-01 00:05:00"), 10.0, 300L),
       (t("2024-01-01 00:05:00"), 20.0, 180L)))
+    assert(hourly == Seq.fill(12)(300L))
+    assert(peak > 0 && peak <= 12, s"peak state rows $peak")
   }
 
   test("incrementalIngest drops corpus dups (stream-static) and in-stream dups") {
