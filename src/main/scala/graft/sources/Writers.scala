@@ -26,11 +26,12 @@ object Writers {
     * 13_binance_calculate_hourly.py:79-85, has the same race) closes
     * because every mutator serializes through the marker.
     *
-    * `fs.create(overwrite = false)` is atomic on HDFS; on the local FS
-    * Hadoop's check-then-create leaves a small race window (fine for the
-    * single-host test/dev use this backs; object stores need their own
-    * conditional-put locking — or use [[ManifestTable]], which replaces
-    * the lock with atomic version claims). Only
+    * `fs.create(overwrite = false)` is atomic on HDFS and on the local FS
+    * through [[GraftLocalFileSystem]], which GraftSession binds to
+    * `file://` (Hadoop's own local FS checks, then creates, leaving a
+    * race window); object stores need their own conditional-put locking
+    * — or use [[ManifestTable]], which replaces the lock with atomic
+    * version claims. Only
     * `FileAlreadyExistsException` reads as contention — any other failure
     * (permissions, transient FS) propagates as itself, and a failure
     * while WRITING the marker payload deletes our own half-created marker

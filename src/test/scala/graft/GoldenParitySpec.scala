@@ -7,11 +7,29 @@ import graft.operators.Joins
 import graft.pipelines.ReferencePipelines
 
 /** Byte-level behavioral parity with the reference's shipped demo outputs
-  * (read-only fixtures under /root/reference — data, not code). */
+  * (read-only fixtures under /root/reference — data, not code).
+  *
+  * The demo2 products CSV is vendored as the test resource
+  * `golden/demo2_source_products.csv` (FIXTURES.md §2 records how its
+  * bytes were derived), so the CSV→JSON path runs everywhere, and again
+  * on the reference's original where that file exists. The JSON parity
+  * checks need the reference's demo inputs and golden outputs, which no
+  * repository file records: they run only where /root/reference/lecture2
+  * holds them, and are cancelled, naming the missing file, elsewhere. */
 class GoldenParitySpec extends SparkSpec {
   import spark.implicits._
 
+  private val ReferenceDir = "/root/reference/lecture2"
+
+  /** Cancels the test unless every named file of the reference's
+    * lecture2 directory is present. */
+  private def assumeReference(names: String*): Unit = names.foreach { n =>
+    val p = java.nio.file.Paths.get(ReferenceDir, n)
+    assume(java.nio.file.Files.isRegularFile(p), s"$p is not present")
+  }
+
   test("tutorial1 normalizer reproduces demo4_output_cleaned.json") {
+    assumeReference("demo4_source_data.json", "demo4_output_cleaned.json")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("name", StringType),
       StructField("email", StringType), StructField("age", LongType)))
@@ -32,6 +50,7 @@ class GoldenParitySpec extends SparkSpec {
   }
 
   test("tutorial1 normalizer reproduces demo1_output_data.json (clean input)") {
+    assumeReference("demo1_source_data.json", "demo1_output_data.json")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("name", StringType),
       StructField("email", StringType), StructField("age", LongType)))
@@ -50,6 +69,7 @@ class GoldenParitySpec extends SparkSpec {
   }
 
   test("demo2 artifact parity: the reference's cross-wired XCom output") {
+    assumeReference("demo1_source_data.json", "demo2_output_products.json")
     // The reference DAG's transform_csv task pulls XCom from
     // task_ids='extract' (the demo1 JSON extract), NOT extract_csv — so
     // its shipped demo2_output_products.json holds the transformed demo1
@@ -73,19 +93,24 @@ class GoldenParitySpec extends SparkSpec {
   }
 
   test("demo2 intended CSV→JSON path: products stay strings, enriched") {
-    val got = ReferencePipelines.tutorial1CsvProducts(spark,
-      "/root/reference/lecture2/demo2_source_products.csv",
-      java.time.Instant.parse("2026-02-10T13:34:05Z"))
-      .select("id", "product_id", "product_name", "price", "stock", "record_count")
-      .orderBy("id")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4), r.getLong(5))).toSeq
-    assert(got == Seq(
-      ("1", "P001", "Laptop", "999.99", "50", 5L),
-      ("2", "P002", "Mouse", "29.99", "200", 5L),
-      ("3", "P003", "Keyboard", "79.99", "150", 5L),
-      ("4", "P004", "Monitor", "299.99", "75", 5L),
-      ("5", "P005", "Webcam", "89.99", "120", 5L)))
+    val vendored = java.nio.file.Paths.get(
+      getClass.getResource("/golden/demo2_source_products.csv").toURI)
+    val original = java.nio.file.Paths.get(ReferenceDir, "demo2_source_products.csv")
+    val sources = vendored +: Seq(original).filter(java.nio.file.Files.isRegularFile(_))
+    sources.foreach { csv =>
+      val got = ReferencePipelines.tutorial1CsvProducts(spark, csv.toString,
+        java.time.Instant.parse("2026-02-10T13:34:05Z"))
+        .select("id", "product_id", "product_name", "price", "stock", "record_count")
+        .orderBy("id")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getString(4), r.getLong(5))).toSeq
+      assert(got == Seq(
+        ("1", "P001", "Laptop", "999.99", "50", 5L),
+        ("2", "P002", "Mouse", "29.99", "200", 5L),
+        ("3", "P003", "Keyboard", "79.99", "150", 5L),
+        ("4", "P004", "Monitor", "299.99", "75", 5L),
+        ("5", "P005", "Webcam", "89.99", "120", 5L)), s"source: $csv")
+    }
   }
 
   test("bucketized range join matches hand-computed point-in-interval") {

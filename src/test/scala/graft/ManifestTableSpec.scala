@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 
-import graft.sources.{ManifestTable, Writers}
+import graft.sources.{GraftLocalFileSystem, ManifestTable, Writers}
 
 /** Object-store-safe commit protocol (ManifestTable) + commit-lock
   * recovery (forceUnlock). The half-commit tests simulate writer crashes
@@ -215,6 +215,32 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.readVersion(spark, root, v).inputFiles.toSeq
         .flatMap(_.split('/').find(_.startsWith("gen-")))).toSet
     assert(onDisk == referenced, s"orphans: ${onDisk -- referenced}")
+  }
+
+  test("create(overwrite = false) is exclusive: one of several racing writers wins") {
+    // the manifest CAS claim is such a create: two winners would both
+    // commit the same version
+    val lfs = new GraftLocalFileSystem
+    lfs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val dir = tmp()
+    val writers = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    try (1 to 50).foreach { round =>
+      val p = new Path(dir, s"v$round")
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val fut = (1 to writers).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            gate.await()
+            try { lfs.create(p, false).close(); true }
+            catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+          }
+        })
+      }
+      gate.countDown()
+      val won = fut.count(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(won == 1, s"round $round: $won of $writers writers created $p")
+    } finally { pool.shutdownNow(); lfs.close() }
   }
 
   test("upsertWithRetry exhausts retries under a permanently blocked slot") {
