@@ -65,7 +65,7 @@ object CurationQueries extends QueryPack {
     "s_token_budget" -> ((s, d) => {
       // fill a 5000-token budget per language with a content-addressed
       // sample (re-runs agree; a raised budget extends the selection).
-      val toks = size(graft.plans.TextNative.tokens(s, col("text"))).cast("long")
+      val toks = size(graft.plans.TextNative.tokens(col("text"))).cast("long")
       Sampling.tokenBudgetSample(
         docs(s, d).select(col("doc_id"), col("lang"), toks.as("n_tokens")),
         col("doc_id"), col("lang"), col("n_tokens"), budget = 5000L)
@@ -91,7 +91,7 @@ object CurationQueries extends QueryPack {
       // oracle replays the same merges with nested replace() over the
       // paren-wrapped representation — bit-identical token streams by
       // construction. (Corpus training is Bpe.train, spec-gated.)
-      val enc = graft.plans.TextNative.bpeEncode(s, col("text"),
+      val enc = graft.plans.TextNative.bpeEncode(col("text"),
         graft.functions.Bpe.PinnedMerges)
       docs(s, d).select(col("doc_id"), enc.as("_enc"))
         .select(col("doc_id"),
@@ -109,7 +109,7 @@ object CurationQueries extends QueryPack {
       // sample, budgeted in learned BPE tokens (the count column is
       // just size(graft_bpe_encode(...)) — the operator is counting-
       // scheme agnostic by design).
-      val toks = graft.plans.TextNative.bpeCount(s, col("text"),
+      val toks = graft.plans.TextNative.bpeCount(col("text"),
         graft.functions.Bpe.PinnedMerges)
       Sampling.tokenBudgetSample(
         docs(s, d).select(col("doc_id"), col("lang"), toks.as("n_tokens")),

@@ -166,7 +166,7 @@ object TrainingDataQueries extends QueryPack {
     "t_text_stats" -> ((s, d) => {
       // tokenize once (native, codegen'd) and fan the array into the
       // measures — the per-text HOF forms re-run the tokenizer per measure.
-      val toks = TextNative.tokens(s, col("text"))
+      val toks = TextNative.tokens(col("text"))
       docs(s, d).select(
         col("doc_id"),
         size(toks).as("token_count"),
@@ -178,7 +178,7 @@ object TrainingDataQueries extends QueryPack {
       docs(s, d).select(
         col("doc_id"), col("lang"),
         TextFunctions.detectLangOf(col("text"),
-          TextNative.tokens(s, col("text"))).as("lang_detected"))),
+          TextNative.tokens(col("text"))).as("lang_detected"))),
     "t_normalize" -> ((s, d) => {
       // normalize-before-hash: NFC + lowercase + whitespace collapse. The
       // synthetic corpus is plain ASCII, so plant decomposed-unicode and
@@ -189,7 +189,7 @@ object TrainingDataQueries extends QueryPack {
           concat(lit("Cafe\u0301  NAI\u0308VE\t"), col("text"),
             lit("  Stra\u00dfe \n")))
           .otherwise(col("text")))
-      val norm = TextNative.normalizeText(s, col("text"))
+      val norm = TextNative.normalizeText(col("text"))
       planted.select(col("doc_id"), norm.as("norm_text"),
         md5(norm).as("norm_hash"))
     }),
@@ -205,7 +205,7 @@ object TrainingDataQueries extends QueryPack {
       val fp = base.select(
         col("doc_id"),
         TextFunctions.fingerprintPortableOf(
-          TextNative.tokens(s, col("text"))).as("fingerprint"))
+          TextNative.tokens(col("text"))).as("fingerprint"))
       val sim = DedupSuite.simhashTable(base, "doc_id", col("text"), portable = true)
         .toDF("doc_id", "simhash")
       fp.join(sim, "doc_id")

@@ -33,8 +33,7 @@ object Bpe {
   def wordHistogram(docs: DataFrame, text: Column,
                     maxWords: Int = 100000): Seq[(String, Long)] = {
     require(maxWords > 0, s"wordHistogram: maxWords must be > 0, got $maxWords")
-    val s = docs.sparkSession
-    docs.select(explode(TextNative.tokens(s, text)).as("w"))
+    docs.select(explode(TextNative.tokens(text)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w").asc)
       .limit(maxWords)
@@ -89,7 +88,7 @@ object Bpe {
   /** BPE token array for `text` under `merges` — native expression,
     * codegen'd, merge table rides the plan as a literal. */
   def encode(text: Column, merges: Seq[(String, String)]): Column =
-    TextNative.bpeEncode(org.apache.spark.sql.SparkSession.active, text, merges)
+    TextNative.bpeEncode(text, merges)
 
   /** A small fixed reference corpus and its trained merge table — the
     * PINNED tokenizer the oracle-gated queries use, so the DuckDB

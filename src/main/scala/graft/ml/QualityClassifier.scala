@@ -28,10 +28,9 @@ object QualityClassifier {
 
   /** Tokenized + rule-labeled + hash-split training frame. */
   def prepare(docs: DataFrame, id: String, text: Column): DataFrame = {
-    val s = docs.sparkSession
     val labels = Curation.qualityRules(docs, id, text)
       .select(col("doc_id"), col("passes").cast("double").as("label"))
-    docs.select(col(id).as("doc_id"), TextNative.tokens(s, text).as("toks"))
+    docs.select(col(id).as("doc_id"), TextNative.tokens(text).as("toks"))
       .join(labels, "doc_id")
       .withColumn("split", Curation.hashSplit(col("doc_id"), trainPct = 80, valPct = 0))
   }
@@ -56,9 +55,8 @@ object QualityClassifier {
   /** Score a corpus: P(passes quality gate) per doc. */
   def score(model: PipelineModel, docs: DataFrame, id: String,
             text: Column): DataFrame = {
-    val s = docs.sparkSession
     val withToks = docs.select(col(id).as("doc_id"),
-      TextNative.tokens(s, text).as("toks"))
+      TextNative.tokens(text).as("toks"))
     model.transform(withToks)
       .select(col("doc_id"),
         element_at(vector_to_array(col("probability")), 2).as("quality_score"))

@@ -33,7 +33,7 @@ object Ann {
   private def cosFn(df: DataFrame, vecCol: String)(a: Column, b: Column): Column =
     df.schema(vecCol).dataType match {
       case ArrayType(FloatType, _) =>
-        NativeFunctions.cosineFloat(df.sparkSession, a, b)
+        NativeFunctions.cosineFloat(a, b)
       case _ => cosine(a, b)
     }
 
@@ -55,7 +55,7 @@ object Ann {
   private def sqFn(df: DataFrame, vecCol: String)(a: Column, b: Column): Column =
     df.schema(vecCol).dataType match {
       case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        NativeFunctions.sqL2Double(df.sparkSession, a, b)
+        NativeFunctions.sqL2Double(a, b)
       case _ => sqL2(a, b)
     }
 
@@ -201,7 +201,7 @@ object Ann {
       vec: Column, numPlanes: Int, dim: Int, seed: Long): Column =
     df.schema(vecCol).dataType match {
       case ArrayType(FloatType, _) =>
-        graft.plans.SignLshSignature.signature(df.sparkSession, vec, numPlanes, dim, seed)
+        graft.plans.SignLshSignature.signature(vec, numPlanes, dim, seed)
       case _ => signLshSignature(vec, numPlanes, dim, seed)
     }
 
@@ -360,8 +360,7 @@ object Ann {
       .select(col("vid"), col("j"),
         slice(col("_v"), col("j") * subDim + 1, lit(subDim)).as("sub"))
     sub.join(broadcast(codebook.toDF("j", "code", "csub")), Seq("j"))
-      .withColumn("d", NativeFunctions.sqL2Double(corpus.sparkSession,
-        col("sub"), col("csub")))
+      .withColumn("d", NativeFunctions.sqL2Double(col("sub"), col("csub")))
       .groupBy(col("vid"), col("j"))
       .agg(min_by(col("code"), struct(col("d"), col("code"))).as("code"))
   }
@@ -380,7 +379,7 @@ object Ann {
     val enc = pqEncode(corpus, idCol, vecCol, codebook, m, dim)
     val dtab = broadcast(queries.toDF("query_id", "q_vec")
       .crossJoin(broadcast(codebook.toDF("j", "code", "csub")))
-      .withColumn("d", NativeFunctions.sqL2Double(corpus.sparkSession,
+      .withColumn("d", NativeFunctions.sqL2Double(
         slice(asDouble(checkedDim(col("q_vec"), dim, "pqTopK query")),
           col("j") * subDim + 1, lit(subDim)),
         col("csub")))

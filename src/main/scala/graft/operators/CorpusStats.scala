@@ -24,10 +24,9 @@ object CorpusStats {
     * Deterministic ties: (count desc, ngram asc). */
   def topNgrams(docs: DataFrame, id: String, text: Column,
                 n: Int = 2, k: Int = 25): DataFrame = {
-    val s = docs.sparkSession
     docs
       .select(col(id).as("_id"),
-        explode(TextNative.chunks(s, text, n, 1)).as("ngram"))
+        explode(TextNative.chunks(text, n, 1)).as("ngram"))
       .groupBy(col("ngram"))
       .agg(count(lit(1)).as("n_occurrences"),
         countDistinct(col("_id")).as("n_docs"))
@@ -43,9 +42,8 @@ object CorpusStats {
     * The corpus total rides in on a broadcast single-row count. */
   def docFrequency(docs: DataFrame, id: String, text: Column,
                    k: Int = 25): DataFrame = {
-    val s = docs.sparkSession
     val df = docs
-      .select(explode(array_distinct(TextNative.tokens(s, text))).as("token"))
+      .select(explode(array_distinct(TextNative.tokens(text))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_total"))
@@ -79,10 +77,9 @@ object CorpusStats {
                     maxPostings: Int = 100, saltBuckets: Int = 16): DataFrame = {
     require(maxPostings > 0 && saltBuckets > 0,
       s"need positive maxPostings/saltBuckets, got $maxPostings/$saltBuckets")
-    val s = docs.sparkSession
     import org.apache.spark.sql.expressions.Window
     val tf = docs
-      .select(col(id).as("_id"), explode(TextNative.tokens(s, text)).as("token"))
+      .select(col(id).as("_id"), explode(TextNative.tokens(text)).as("token"))
       .groupBy(col("token"), col("_id"))
       .agg(count(lit(1)).as("tf"))
     val byRank = Window.partitionBy(col("token"), col("_salt"))
@@ -121,10 +118,9 @@ object CorpusStats {
     * token rows to one reducer. */
   def vocabStats(docs: DataFrame, id: String, text: Column,
                  slices: Seq[String]): DataFrame = {
-    val s = docs.sparkSession
     docs
       .select(col(id).as("_id") +: slices.map(col) :+
-        explode(TextNative.tokens(s, text)).as("token"): _*)
+        explode(TextNative.tokens(text)).as("token"): _*)
       .groupBy(slices.map(col): _*)
       .agg(
         countDistinct(col("_id")).as("n_docs"),
@@ -172,9 +168,8 @@ object CorpusStats {
   def bigramLmQuality(docs: DataFrame, id: String, text: Column,
                       minCount: Long = 3L): DataFrame = {
     require(minCount >= 1, s"bigramLmQuality: minCount must be >= 1, got $minCount")
-    val s = docs.sparkSession
     val db = docs.select(col(id).as("doc_id"),
-      explode(TextNative.chunks(s, text, 2, 1)).as("bigram"))
+      explode(TextNative.chunks(text, 2, 1)).as("bigram"))
     // collapse to (doc, bigram, tf) FIRST: repeated phrasing inside a
     // document ("the the the…", boilerplate) folds map-side before any
     // wide exchange, so the model build, the model probe, and the
@@ -185,7 +180,7 @@ object CorpusStats {
       .agg(count(lit(1)).as("tf"))
     val model = tf.groupBy(col("bigram")).agg(sum(col("tf")).as("c2"))
       .filter(col("c2") >= minCount)
-    val uni = docs.select(explode(TextNative.tokens(s, text)).as("token"))
+    val uni = docs.select(explode(TextNative.tokens(text)).as("token"))
     val consts = uni.agg(countDistinct(col("token")).as("vsize"))
       .crossJoin(tf.agg(sum(col("tf")).as("n2")))
     // LEFT join: a below-floor bigram scores as unseen (c2 = 0). At the

@@ -28,15 +28,14 @@ object Curation {
   def overlapWithEval(corpus: DataFrame, evalSet: DataFrame, id: String,
                       text: Column, shingleSize: Int = 3,
                       minOverlap: Int = 3): DataFrame = {
-    val s = corpus.sparkSession
     val evalSh = evalSet
-      .filter(size(TextNative.tokens(s, text)) >= shingleSize)
-      .select(explode(TextNative.shingles(s, text, shingleSize)).as("_s"))
+      .filter(size(TextNative.tokens(text)) >= shingleSize)
+      .select(explode(TextNative.shingles(text, shingleSize)).as("_s"))
       .distinct()
     val corpSh = corpus
-      .filter(size(TextNative.tokens(s, text)) >= shingleSize)
+      .filter(size(TextNative.tokens(text)) >= shingleSize)
       .select(col(id).as("doc_id"),
-        explode(TextNative.shingles(s, text, shingleSize)).as("_s"))
+        explode(TextNative.shingles(text, shingleSize)).as("_s"))
     val counts = corpSh.join(evalSh, "_s")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
     corpus.select(col(id).as("doc_id"))
@@ -78,13 +77,12 @@ object Curation {
                    minTokens: Int = 20, maxTokens: Int = 1000,
                    minMeanLen: Double = 3.0, maxMeanLen: Double = 8.0,
                    maxTopRatio: Double = 0.2): DataFrame = {
-    val s = docs.sparkSession
     val stats = docs
-      .select(col(id).as("doc_id"), TextNative.tokens(s, text).as("_toks"))
+      .select(col(id).as("doc_id"), TextNative.tokens(text).as("_toks"))
       .select(col("doc_id"),
         size(col("_toks")).as("token_count"),
         aggregate(col("_toks"), lit(0L), (a, t) => a + length(t)).as("_charsum"),
-        TextNative.topTokenCount(s, col("_toks")).as("_top"))
+        TextNative.topTokenCount(col("_toks")).as("_top"))
     val tc = col("token_count")
     val mean = when(tc > 0,
       col("_charsum").cast("double") / tc.cast("double")).otherwise(lit(0.0))
@@ -109,17 +107,16 @@ object Curation {
     * that array — the whole operator is a single codegen'd projection.
     * Quotients stay raw doubles (oracle parity). */
   def repetitionStats(docs: DataFrame, id: String, text: Column): DataFrame = {
-    val s = docs.sparkSession
     val base = docs.select(col(id).as("doc_id"),
-      TextNative.chunks(s, text, 2, 1).as("_bg"),
-      TextNative.chunks(s, text, 10, 10).as("_ch"))
+      TextNative.chunks(text, 2, 1).as("_bg"),
+      TextNative.chunks(text, 10, 10).as("_ch"))
     val nBg = size(col("_bg"))
     val nCh = size(col("_ch"))
     base.select(col("doc_id"),
       nBg.cast("long").as("n_bigrams"),
       when(nBg > 0, (nBg - size(array_distinct(col("_bg")))).cast("double") / nBg)
         .otherwise(lit(0.0)).as("dup_bigram_frac"),
-      when(nBg > 0, TextNative.topTokenCount(s, col("_bg")).cast("double") / nBg)
+      when(nBg > 0, TextNative.topTokenCount(col("_bg")).cast("double") / nBg)
         .otherwise(lit(0.0)).as("top_bigram_ratio"),
       nCh.cast("long").as("n_chunks10"),
       when(nCh > 0, (nCh - size(array_distinct(col("_ch")))).cast("double") / nCh)
@@ -139,14 +136,13 @@ object Curation {
   def packSequences(docs: DataFrame, id: String, text: Column,
                     seqLen: Int = 2048, shards: Int = 8,
                     bpeMerges: Seq[(String, String)] = Nil): DataFrame = {
-    val s = docs.sparkSession
     // token-EXACT mode: with a learned BPE merge table the budget is
     // counted in the tokens the trainer will actually see, not
     // whitespace words — the table rides the plan as a literal, so the
     // counting pass stays one codegen'd projection either way
     val tokCount =
-      if (bpeMerges.isEmpty) size(TextNative.tokens(s, text))
-      else TextNative.bpeCount(s, text, bpeMerges)
+      if (bpeMerges.isEmpty) size(TextNative.tokens(text))
+      else TextNative.bpeCount(text, bpeMerges)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,

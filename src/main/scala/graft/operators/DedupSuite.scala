@@ -59,11 +59,10 @@ object DedupSuite {
     * once for signatures plus once per verify-join side. */
   private def shingleSets(docs: DataFrame, id: String, text: Column,
                           shingleSize: Int): DataFrame = {
-    val s = docs.sparkSession
     docs
-      .filter(size(TextNative.tokens(s, text)) >= shingleSize)
+      .filter(size(TextNative.tokens(text)) >= shingleSize)
       .select(col(id).as("_id"),
-        TextNative.shingles(s, text, shingleSize).as("_sh"))
+        TextNative.shingles(text, shingleSize).as("_sh"))
   }
 
   /** LSH band-membership rows: (_id, band, bh), `bands` rows per doc.
@@ -80,7 +79,7 @@ object DedupSuite {
     // gets projection-collapsed into `bands` re-computations of the
     // whole signature per row (a silent 16x).
     base.select(col("_id"),
-      TextNative.minhashBands(base.sparkSession, col("_sh"), numHashes, bands)
+      TextNative.minhashBands(col("_sh"), numHashes, bands)
         .as("_bands"))
       .select(col("_id"), posexplode(col("_bands")).as(Seq("band", "bh")))
 
@@ -275,8 +274,7 @@ object DedupSuite {
     */
   def chunkDedup(docs: DataFrame, id: String, text: Column,
                  chunkTokens: Int = 20): DataFrame = {
-    val s = docs.sparkSession
-    val chunkArr = TextNative.chunks(s, text, chunkTokens, chunkTokens)
+    val chunkArr = TextNative.chunks(text, chunkTokens, chunkTokens)
     val chunked = docs
       .select(col(id).as("_id"), posexplode(chunkArr).as(Seq("chunk_idx", "chunk")))
     val winners = chunked
@@ -523,12 +521,12 @@ object DedupSuite {
       // fused scalar expression: one pass per doc, no explode, NO shuffle —
       // bit-identical to the explode/agg shape below (NativeExprSpec).
       return docs.select(col(id).as("_id"),
-        TextNative.simhash60(docs.sparkSession, text).as("_sim"))
+        TextNative.simhash60(text).as("_sim"))
     }
     val numBits = 64
     val tok = docs
       .select(col(id).as("_id"),
-        explode(TextNative.tokens(docs.sparkSession, text)).as("_t"))
+        explode(TextNative.tokens(text)).as("_t"))
       .select(col("_id"), xxhash64(col("_t")).as("_h"))
     val bitSums = (0 until numBits).map { b =>
       sum(when(shiftright(col("_h"), b).bitwiseAND(lit(1L)) === 1L, 1)

@@ -355,8 +355,7 @@ object Joins {
     val n = if (expectedItems > 0) expectedItems else keys.count()
     val bf = keys.stat.bloomFilter(smallKey, math.max(n, 1L), fpp)
     val pruned = large.filter(
-      graft.plans.BloomNative.mightContain(large.sparkSession,
-        col(largeKey).cast("long"), bf))
+      graft.plans.BloomNative.mightContain(col(largeKey).cast("long"), bf))
     pruned.join(small, pruned(largeKey) === small(smallKey), joinType)
   }
 

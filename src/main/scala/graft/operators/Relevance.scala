@@ -61,7 +61,7 @@ object Relevance {
 
     // one tokenize per doc; dl (doc length) rides along as a long
     val base = docs.select(col(id).as("_id"),
-      TextNative.tokens(s, text).as("_toks"))
+      TextNative.tokens(text).as("_toks"))
       .select(col("_id"), col("_toks"), size(col("_toks")).cast("long").as("dl"))
 
     // corpus scalars: N over ALL docs, avgdl = sum(dl)/N (exact longs,

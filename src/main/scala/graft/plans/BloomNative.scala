@@ -2,11 +2,12 @@ package graft.plans
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -65,19 +66,14 @@ case class BloomContains(left: Expression, right: Expression)
 
 object BloomNative {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", exprs => BloomContains(exprs(0), exprs(1)),
-      "built-in")
-
   /** Membership probe column for a pre-built sketch. */
-  def mightContain(spark: SparkSession, key: Column, bf: BloomFilter): Column = {
-    register(spark)
+  def mightContain(key: Column, bf: BloomFilter): Column = {
     val bytes = {
       val out = new java.io.ByteArrayOutputStream()
       bf.writeTo(out)
       out.toByteArray
     }
-    call_function("graft_bloom_contains", key, lit(bytes))
+    ColumnExpr.column(BloomContains(ColumnExpr.expression(key),
+      ColumnExpr.expression(lit(bytes))))
   }
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression: cosine similarity over two `array<float>`
@@ -378,8 +377,8 @@ case class NearestInArray(left: Expression, right: Expression, n: Int)
 
 /** Deployment-grade wiring: inject graft's native expressions into every
   * session via `spark.sql.extensions=graft.plans.GraftExtensions` (the
-  * spark-submit path). In-process callers can use
-  * [[NativeFunctions.register]] instead. */
+  * spark-submit path); Column-API callers build the expressions directly
+  * ([[NativeFunctions]], [[TextNative]], [[SignLshSignature.signature]]). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     // lakehouse maintenance grammar (GRAFT HISTORY/VACUUM/RESTORE/…):
@@ -416,25 +415,16 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   }
 }
 
-/** Registration + Column-API access for the native expressions. */
+/** Column-API access for the native expressions (SQL callers reach
+  * them through [[GraftExtensions]]). */
 object NativeFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sql2", exprs => SqL2Distance(exprs(0), exprs(1)), "built-in")
-  }
+  import org.apache.spark.sql.graftshim.ColumnExpr.{column, expression}
 
-  /** Cosine over float-array columns via the native expression. The
-    * session must have [[register]]ed (Ann does this on entry). */
-  def cosineFloat(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_cosine", a, b)
-  }
+  /** Cosine over float-array columns via the native expression. */
+  def cosineFloat(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 
   /** Squared L2 over double-array columns via the native expression. */
-  def sqL2Double(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_sql2", a, b)
-  }
+  def sqL2Double(a: Column, b: Column): Column =
+    column(SqL2Distance(expression(a), expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** Native Catalyst expression: sign-LSH bucket signature of an
@@ -97,25 +97,8 @@ object SignLshSignature {
       }
     }
 
-  /** Register + call as a SQL-surface function: the int args are consumed
-    * at resolution time (they must be literals). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_lsh",
-      exprs => SignLshSignature(
-        exprs(0),
-        ExprArgs.toInt(exprs(1).eval()),
-        ExprArgs.toInt(exprs(2).eval()),
-        ExprArgs.toLong(exprs(3).eval())),
-      "built-in")
-
-  /** Column-API access to the native expression. */
-  def signature(spark: SparkSession, vec: Column, numPlanes: Int, dim: Int,
-                seed: Long): Column = {
-    register(spark)
-    call_function("graft_sign_lsh", vec,
-      org.apache.spark.sql.functions.lit(numPlanes),
-      org.apache.spark.sql.functions.lit(dim),
-      org.apache.spark.sql.functions.lit(seed))
-  }
+  /** Column-API access to the native expression (SQL callers reach it
+    * as `graft_sign_lsh` through [[GraftExtensions]]). */
+  def signature(vec: Column, numPlanes: Int, dim: Int, seed: Long): Column =
+    ColumnExpr.column(SignLshSignature(ColumnExpr.expression(vec), numPlanes, dim, seed))
 }

@@ -2,12 +2,12 @@ package graft.plans
 
 import java.util.LinkedHashSet
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnExpr.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,96 +94,38 @@ object TextNative {
     v >>> 4
   }
 
-  /** Register the native text functions on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokens", exprs => WordTokens(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => WordShingles(exprs(0), ExprArgs.toInt(exprs(1).eval())),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash60", exprs => SimHash60(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      exprs => MinHashSig(exprs(0), ExprArgs.toInt(exprs(1).eval())),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_bands",
-      exprs => MinHashBands(exprs(0), ExprArgs.toInt(exprs(1).eval()),
-        ExprArgs.toInt(exprs(2).eval())),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_token_count", exprs => TopTokenCount(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chunks",
-      exprs => WordChunks(exprs(0), ExprArgs.toInt(exprs(1).eval()),
-        ExprArgs.toInt(exprs(2).eval())),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_norm_text", exprs => NormalizeText(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_encode",
-      exprs => BpeEncode(exprs(0),
-        exprs(1).eval().asInstanceOf[UTF8String].toString),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_count",
-      exprs => BpeCount(exprs(0),
-        exprs(1).eval().asInstanceOf[UTF8String].toString),
-      "built-in")
-  }
-
   /** BPE token COUNT — the budget-counting hot path: identical
     * semantics to `size(bpeEncode(...))` without materializing the
     * token array (pinned equal in BpeSpec). */
-  def bpeCount(spark: SparkSession, text: Column,
-               merges: Seq[(String, String)]): Column = {
-    register(spark)
-    call_function("graft_bpe_count", text,
-      org.apache.spark.sql.functions.lit(
-        merges.map { case (a, b) => s"$a $b" }.mkString(",")))
-  }
+  def bpeCount(text: Column, merges: Seq[(String, String)]): Column =
+    column(BpeCount(expression(text), merges.map { case (a, b) => s"$a $b" }.mkString(",")))
 
   /** BPE token array for a document under a learned merge table — one
     * native pass (tokenize + greedy merges); see [[BpeEncode]] for the
     * cross-engine representation contract. */
-  def bpeEncode(spark: SparkSession, text: Column,
-                merges: Seq[(String, String)]): Column = {
-    register(spark)
-    call_function("graft_bpe_encode", text,
-      org.apache.spark.sql.functions.lit(
-        merges.map { case (a, b) => s"$a $b" }.mkString(",")))
-  }
+  def bpeEncode(text: Column, merges: Seq[(String, String)]): Column =
+    column(BpeEncode(expression(text), merges.map { case (a, b) => s"$a $b" }.mkString(",")))
 
   /** Ordered word tokens (duplicates kept) — native twin of
     * [[graft.functions.TextFunctions.tokens]]. */
-  def tokens(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_tokens", text)
-  }
+  def tokens(text: Column): Column =
+    column(WordTokens(expression(text)))
 
   /** DISTINCT word n-gram shingles — native fusion of
     * `array_distinct(TextFunctions.shingles(text, n))`. */
-  def shingles(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("graft_shingles", text, org.apache.spark.sql.functions.lit(n))
-  }
+  def shingles(text: Column, n: Int): Column =
+    column(WordShingles(expression(text), n))
 
   /** Whole-document 60-bit portable SimHash in one pass — native fusion of
     * tokenize → md5-prefix hash per token → per-bit ±1 majority vote. */
-  def simhash60(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_simhash60", text)
-  }
+  def simhash60(text: Column): Column =
+    column(SimHash60(expression(text)))
 
   /** Highest multiplicity of any token in the array (the repetition
     * measure in quality gating) in one pass — native fusion of
     * explode + per-token count + max + join-back. */
-  def topTokenCount(spark: SparkSession, toks: Column): Column = {
-    register(spark)
-    call_function("graft_top_token_count", toks)
-  }
+  def topTokenCount(toks: Column): Column =
+    column(TopTokenCount(expression(toks)))
 
   /** Token windows joined with spaces, duplicates kept and order
     * preserved — one pass per document. `step == n` gives non-overlapping
@@ -191,30 +133,21 @@ object TextNative {
     * token-stream corpora: ceil(tokens/n) chunks); `step < n` gives
     * sliding n-grams over full windows only (the with-duplicates twin of
     * [[shingles]], for repetition measures). */
-  def chunks(spark: SparkSession, text: Column, n: Int, step: Int): Column = {
-    register(spark)
-    call_function("graft_chunks", text,
-      org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(step))
-  }
+  def chunks(text: Column, n: Int, step: Int): Column =
+    column(WordChunks(expression(text), n, step))
 
   /** Canonical text normalization in one pass: Unicode NFC composition,
     * Unicode lowercase, whitespace collapse, trim — the normalize-before-
     * hash step that keeps byte-level dedup from treating 'Café'/'Cafe
     * +U0301' as different documents. Oracle twin:
     * `trim(regexp_replace(lower(nfc_normalize(text)), '[ \\t\\n\\r]+', ' ', 'g'))`. */
-  def normalizeText(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("graft_norm_text", text)
-  }
+  def normalizeText(text: Column): Column =
+    column(NormalizeText(expression(text)))
 
   /** MinHash signature (array of k minima) over a shingle array in one
     * pass — native fusion of explode + k min-aggregates + re-group. */
-  def minhashSig(spark: SparkSession, shingles: Column, numHashes: Int): Column = {
-    register(spark)
-    call_function("graft_minhash_sig", shingles,
-      org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def minhashSig(shingles: Column, numHashes: Int): Column =
+    column(MinHashSig(expression(shingles), numHashes))
 
   /** LSH band hashes (array of `bands` xxhash64 values over consecutive
     * r-runs of the minhash signature) in the same single pass. Returning
@@ -222,13 +155,8 @@ object TextNative {
     * per-band expressions that each reference the signature column gets
     * projection-collapsed into `bands` copies of the whole signature
     * computation — this shape is evaluated exactly once per row. */
-  def minhashBands(spark: SparkSession, shingles: Column, numHashes: Int,
-                   bands: Int): Column = {
-    register(spark)
-    call_function("graft_minhash_bands", shingles,
-      org.apache.spark.sql.functions.lit(numHashes),
-      org.apache.spark.sql.functions.lit(bands))
-  }
+  def minhashBands(shingles: Column, numHashes: Int, bands: Int): Column =
+    column(MinHashBands(expression(shingles), numHashes, bands))
 }
 
 case class WordTokens(child: Expression) extends UnaryExpression {

@@ -28,8 +28,22 @@ import graft.operators.Upsert
   * orphan generation is deleted. Mutators (upsert/compact) are
   * compare-and-swap — they commit `readVersion + 1`, so a merge based on
   * a stale read can never overwrite a concurrent commit; callers retry
-  * the whole read-merge-write ([[upsertWithRetry]] packages that loop
-  * with bounded exponential backoff).
+  * the whole read-merge-write ([[retryOnConflict]] and [[upsertWithRetry]]
+  * package that loop with bounded exponential backoff).
+  *
+  * Every mutator takes ONE commit path ([[commit]]): it writes its data
+  * (generations, deletion vectors, change-feed rows, snapshot sidecar),
+  * stages the manifest together with the paths it wrote, and hands both
+  * over. `commit` owns the rest of the protocol — the claim (with dead
+  * half-claim recovery after [[ClaimGraceMs]]), deleting the staged
+  * paths on every exit that does not commit (a claim that fails with its
+  * manifest already visible keeps them: the version may be committed),
+  * the lost-race
+  * [[ManifestTable.ConcurrentCommitException]], and the pointer advance
+  * after a snapshot. The two mutators that can re-claim data they have
+  * already written — [[write]]'s re-stamp at the new head and the
+  * partitioned upsert's disjoint rebase — do so through its re-stage
+  * callback, so they follow the same rules.
   *
   * Readers resolve the newest manifest whose sentinel is present: a
   * writer that crashed after creating but before finishing a manifest (or
@@ -888,23 +902,102 @@ object ManifestTable {
     }
   }
 
+  /** Age past which a sentinel-less manifest is a dead claimer's corpse
+    * rather than a live claimer mid-write ([[claimOrRecover]]): a live
+    * claimer writes its payload within milliseconds of creating the file. */
+  private[graft] val ClaimGraceMs = 60000L
+
+  /** A mutator's prepared commit: the manifest to claim plus every path
+    * the mutator wrote for it — generation, deletion-vector, change-feed
+    * and snapshot-sidecar dirs — which [[commit]] deletes if the claim
+    * never lands. */
+  private final case class Staged(manifest: Manifest, written: Seq[Path])
+
+  /** [[Staged]] for a manifest whose root-relative `dirs` (generation,
+    * deletion-vector) were written for it; the manifest's own change-feed
+    * dir and the snapshot sidecar, if any, are added. */
+  private def staged(root: String, m: Manifest, dirs: Iterable[String],
+                     sidecar: Option[Path] = None): Staged =
+    Staged(m, (dirs ++ m.cdf.map(_._1)).map(new Path(root, _)).toSeq ++ sidecar)
+
+  /** The one commit path every mutator takes. Claims the staged
+    * version; on a lost claim asks `restage` for a replacement staged
+    * against the new head (the overwrite's re-stamp, the upsert's
+    * disjoint rebase) and claims that, deleting whatever the replacement
+    * no longer needs; `None` gives up with [[ConcurrentCommitException]].
+    * Every exit that does not commit — a lost claim, or an exception
+    * from the claim or from `restage` — deletes the staged `written`
+    * paths (never orphan yourself). Nothing is deleted once a claim has
+    * landed, and that includes a claim that threw after its sentinel
+    * became visible (a close whose acknowledgement was lost): the
+    * manifest at the slot may be ours, so its data stays and the error
+    * propagates. A committed snapshot then advances the
+    * `_last_checkpoint` pointer. Returns the committed version. */
+  private def commit(fs: FileSystem, root: String, first: Staged,
+                     restage: Staged => Option[Staged] = _ => None): Long = {
+    var cur = first
+    var claiming = false
+    var committed = false
+    try {
+      def claimed(): Boolean = {
+        claiming = true
+        val won = claimOrRecover(fs, root, cur.manifest)
+        claiming = false
+        won
+      }
+      while (!claimed()) {
+        val next = restage(cur).getOrElse(
+          throw new ConcurrentCommitException(root, cur.manifest.version))
+        discard(fs, cur.written.filterNot(next.written.contains))
+        cur = next
+      }
+      committed = true
+    } finally {
+      val inDoubt = claiming &&
+        scala.util.Try(readRaw(fs, root, cur.manifest.version)).toOption.flatten.nonEmpty
+      if (!committed && !inDoubt) discard(fs, cur.written)
+    }
+    if (isSnapshot(cur.manifest)) writePointer(fs, root, cur.manifest.version)
+    cur.manifest.version
+  }
+
+  /** Best-effort recursive delete of paths a commit no longer needs. */
+  private def discard(fs: FileSystem, paths: Seq[Path]): Unit =
+    paths.foreach(p => scala.util.Try(fs.delete(p, true)))
+
+  /** Whether version `v` commits a full snapshot under the given
+    * cadence (every `checkpointInterval`-th version; <= 1 = always). */
+  private def snapshotDue(v: Long, checkpointInterval: Int): Boolean =
+    checkpointInterval <= 1 || v % checkpointInterval == 0
+
+  /** v1 re-seed guard: a None head while COMMITTED versions exist is a
+    * transient resolution failure, not an empty table — claiming v1 then
+    * would land below the vacuum floor and shadow every newer commit
+    * ([[hasCommittedVersion]]). Surfaces as a CAS conflict so retry loops
+    * re-read. */
+  private def refuseReseed(fs: FileSystem, root: String): Unit =
+    if (hasCommittedVersion(fs, root)) throw new ConcurrentCommitException(root, 1L)
+
+  /** The newest committed state; a table with none is an error. */
+  private def head(spark: SparkSession, root: String): State =
+    current(spark, root).getOrElse(sys.error(s"manifest table $root has no committed version"))
+
   /** Atomically claim `version` and, on conflict, recover a DEAD
     * half-claim: an object-store conditional put is all-or-nothing, but
     * on local/HDFS a claimer dying between `create` and writing the
     * sentinel leaves a sentinel-less file that would block its version
     * slot forever. A conflict against a sentinel-less manifest older than
-    * `graceMs` (a live claimer writes its payload within milliseconds of
-    * creating the file) deletes the corpse and retries the claim once; a
-    * conflict against a COMMITTED manifest is a genuine lost race. */
-  private def claimOrRecover(fs: FileSystem, root: String, m: Manifest,
-                             graceMs: Long): Boolean =
+    * [[ClaimGraceMs]] deletes the corpse and retries the claim once; a
+    * conflict against a COMMITTED manifest is a genuine lost race. Called
+    * only from [[commit]]. */
+  private def claimOrRecover(fs: FileSystem, root: String, m: Manifest): Boolean =
     claim(fs, root, m) || {
       val version = m.version
       val p = manifestPath(root, version)
       val corpse = scala.util.Try(fs.getFileStatus(p)).toOption
       corpse.exists { st0 =>
         readRaw(fs, root, version).isEmpty &&
-          (System.currentTimeMillis() - st0.getModificationTime) > graceMs && {
+          (System.currentTimeMillis() - st0.getModificationTime) > ClaimGraceMs && {
           // re-verify IMMEDIATELY before the destructive delete: between
           // the grace check above and here, a rival may have deleted the
           // same corpse and committed a real manifest at this version —
@@ -1282,10 +1375,8 @@ object ManifestTable {
     * whole read-sketch-commit). Returns the committed version, or the
     * current one when nothing needed backfilling. */
   def backfillSketches(spark: SparkSession, root: String,
-                       cols: Seq[String] = Nil,
-                       graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+                       cols: Seq[String] = Nil): Long = {
+    val st = head(spark, root)
     val logical =
       if (cols.nonEmpty) cols
       else {
@@ -1347,10 +1438,8 @@ object ManifestTable {
     if (enriched.isEmpty) return st.version
     val fs = fsOf(spark, root)
     val v = st.version + 1
-    val manifest = DeltaManifest(v, enriched, enriched.map(_.relPath),
-      st.tags + (OpTag -> "analyze"), None)
-    if (!claimOrRecover(fs, root, manifest, graceMs))
-      throw new ConcurrentCommitException(root, v)
+    commit(fs, root, Staged(DeltaManifest(v, enriched, enriched.map(_.relPath),
+      st.tags + (OpTag -> "analyze"), None), Nil))
     log.info(s"manifest table $root: backfilled ndv sketches on " +
       s"${enriched.size} files (${logical.mkString(", ")}) — metadata-only v$v")
     v
@@ -1398,12 +1487,23 @@ object ManifestTable {
     * partition column would fail every subsequent upsert's dtype check
     * against its own string read-back — permanently un-upsertable. The
     * cast also makes dir spelling canonical from birth (dirs are
-    * written from the string form, which round-trips exactly). */
-  private def normalizePartitionCols(df: DataFrame, partitionCols: Seq[String]): DataFrame =
-    if (partitionCols.isEmpty) df
+    * written from the string form, which round-trips exactly).
+    *
+    * Layout columns the table `tags` declare TYPED ([[PartitionTypesTag]])
+    * are left alone: their read-back is the declared type, so batches,
+    * merge sources and rewrites must stay typed through every dtype check
+    * and union with existing rows — the generation write renders their
+    * dirs canonically from the typed values (ints and dates have one
+    * rendering). */
+  private def normalizePartitionCols(df: DataFrame, partitionCols: Seq[String],
+                                     tags: Map[String, String]): DataFrame = {
+    val typed = partitionTypes(tags)
+    val cast = partitionCols.filterNot(typed.contains)
+    if (cast.isEmpty) df
     else df.select(df.columns.toIndexedSeq.map { c =>
-      if (partitionCols.contains(c)) col(c).cast("string").as(c) else col(c)
+      if (cast.contains(c)) col(c).cast("string").as(c) else col(c)
     }: _*)
+  }
 
   /** Write `df` into a fresh immutable generation dir; returns the
     * generation's file entries. Generations are written with
@@ -1543,8 +1643,7 @@ object ManifestTable {
     * before it existed (the standard lakehouse contract; a RENAME or
     * type change is a rewrite, not evolution). */
   def read(spark: SparkSession, root: String): DataFrame =
-    readState(spark, root, current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version")))
+    readState(spark, root, head(spark, root))
 
   /** The table's logical schema in its DECLARED column order. The scan
     * order puts hive partition columns last (they come off directory
@@ -1592,8 +1691,7 @@ object ManifestTable {
     * carry it as all-null). */
   def readWhere(spark: SparkSession, root: String,
                 filter: org.apache.spark.sql.Column): DataFrame =
-    readStateWhere(spark, root, current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version")), filter)
+    readStateWhere(spark, root, head(spark, root), filter)
 
   /** [[readWhere]] against a time-travel version ([[readVersion]]'s
     * contract): metadata pruning works identically on any retained
@@ -1729,12 +1827,10 @@ object ManifestTable {
     * dataset is vacuum-reclaimed once no retained version references
     * it. */
   def buildBloomIndex(spark: SparkSession, root: String, cols: Seq[String],
-                      fpp: Double = 0.01, graceMs: Long = 60000L): Long = {
+                      fpp: Double = 0.01): Long = {
     require(cols.nonEmpty, "buildBloomIndex: need at least one column")
     require(fpp > 0.0 && fpp < 1.0, s"buildBloomIndex: fpp must be in (0,1), got $fpp")
-    val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     // the API takes LOGICAL names; the index keys by the PHYSICAL
     // in-file names (probes arrive physicalized from readStateWhere)
     val physCols = cols.map(physicalName(st.tags, _))
@@ -1784,23 +1880,17 @@ object ManifestTable {
     val dir = s"bloomidx-${java.util.UUID.randomUUID().toString.take(12)}"
     idx.write.mode(SaveMode.ErrorIfExists).parquet(new Path(root, dir).toString)
     val colsSpec = physCols.zip(kinds).map { case (c, k) => s"${enc(c)}:$k" }.mkString(",")
-    try commitMeta(spark, root, st,
-      st.tags + (BloomIndexTag -> dir) + (BloomColsTag -> colsSpec), graceMs)
-    catch {
-      case e: ConcurrentCommitException =>
-        fs.delete(new Path(root, dir), true)
-        throw e
-    }
+    commitMeta(spark, root, st,
+      st.tags + (BloomIndexTag -> dir) + (BloomColsTag -> colsSpec),
+      written = Seq(new Path(root, dir)))
   }
 
   /** Retire the bloom index (metadata commit; the dataset itself is
     * vacuum-reclaimed once unreferenced). No-op without one. */
-  def dropBloomIndex(spark: SparkSession, root: String,
-                     graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+  def dropBloomIndex(spark: SparkSession, root: String): Long = {
+    val st = head(spark, root)
     if (!st.tags.contains(BloomIndexTag)) return st.version
-    commitMeta(spark, root, st, st.tags - BloomIndexTag - BloomColsTag, graceMs)
+    commitMeta(spark, root, st, st.tags - BloomIndexTag - BloomColsTag)
   }
 
   /** Cap on probe values per conjunct: above this the TreeSet range
@@ -1913,8 +2003,7 @@ object ManifestTable {
     * from any sibling column's value count (value counts include nulls,
     * so every stats-bearing column of a file counts its rows). */
   def statsOnly(spark: SparkSession, root: String): DataFrame = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     // a live deletion vector makes every file-level stat a SUPERSET of
     // the live rows (counts overcount; a deleted row may have owned the
     // min/max) — exactness is the whole contract here, so every stat
@@ -2012,8 +2101,7 @@ object ManifestTable {
     * is the file's live count by construction). None when any live file
     * predates per-file row counts — honesty over approximation. */
   def rowCount(spark: SparkSession, root: String): Option[Long] =
-    current(spark, root).map(stateRowCount).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    stateRowCount(head(spark, root))
 
   /** [[rowCount]] at a pinned version — the zero-scan COUNT(*) for
     * time-traveled reads. None when the version is unresolvable or any
@@ -2197,7 +2285,7 @@ object ManifestTable {
         // re-reads the window — idempotent either way.
         current(spark, dstRoot).foreach { dstSt =>
           try commitMeta(spark, dstRoot, dstSt,
-            dstSt.tags + (s"$StreamBatchTag.$sinkId" -> srcV.toString), 60000L)
+            dstSt.tags + (s"$StreamBatchTag.$sinkId" -> srcV.toString))
           catch {
             case _: ConcurrentCommitException =>
               // the advance is an optimization, not a correctness gate:
@@ -2337,10 +2425,8 @@ object ManifestTable {
     * full [[compact]] rewrites every file under the current spec and
     * retires the mixed state. */
   def evolvePartitionSpec(spark: SparkSession, root: String,
-                          partitionCols: Seq[String],
-                          graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+                          partitionCols: Seq[String]): Long = {
+    val st = head(spark, root)
     val parsed = partitionCols.map(parsePartitionSpec)
     val newLayout = parsed.map(_._1)
     require(newLayout.distinct.size == newLayout.size,
@@ -2375,7 +2461,7 @@ object ManifestTable {
       (LayoutTag -> newLayout.mkString(",")) + (EvolvedTag -> "true") ++
       (if (merged.nonEmpty) Map(GeneratedTag -> encodeGenerated(merged))
        else Map.empty)
-    commitMeta(spark, root, st, newTags, graceMs, op = "evolve-spec")
+    commitMeta(spark, root, st, newTags, op = "evolve-spec")
   }
 
   /** Post-evolution read repair: every generated column reads its TRUE
@@ -2628,11 +2714,9 @@ object ManifestTable {
     * are refused. The new name must not collide with any live logical
     * OR physical name (the latter keeps [[logicalize]] idempotent and
     * un-ambiguous). */
-  def renameColumn(spark: SparkSession, root: String, from: String, to: String,
-                   graceMs: Long = 60000L): Long = {
+  def renameColumn(spark: SparkSession, root: String, from: String, to: String): Long = {
     require(to.nonEmpty && to != from, s"renameColumn: bad target '$to'")
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val phys = schemaEvoCheck(spark, root, st, from, "renameColumn")
     val logicalCols = readState(spark, root, st).columns.toSeq
     require(!logicalCols.contains(to),
@@ -2646,7 +2730,7 @@ object ManifestTable {
     val newTags =
       (if (ren.isEmpty) st.tags - RenameTag
        else st.tags + (RenameTag -> encodeRenames(ren)))
-    commitMeta(spark, root, st, newTags, graceMs, op = "rename")
+    commitMeta(spark, root, st, newTags, op = "rename")
   }
 
   /** Drop a column WITHOUT rewriting: the physical column joins the
@@ -2655,10 +2739,8 @@ object ManifestTable {
     * natural rewrite (compact/cluster/mutation) and new generations
     * simply never carry it. Same refusals as [[renameColumn]], plus the
     * last column cannot be dropped. */
-  def dropColumn(spark: SparkSession, root: String, name: String,
-                 graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+  def dropColumn(spark: SparkSession, root: String, name: String): Long = {
+    val st = head(spark, root)
     val phys = schemaEvoCheck(spark, root, st, name, "dropColumn")
     require(readState(spark, root, st).columns.length > 1,
       s"dropColumn: '$name' is the last column of $root")
@@ -2667,7 +2749,7 @@ object ManifestTable {
     val base = st.tags + (DropTag -> dr.toSeq.sorted.map(enc).mkString(","))
     val newTags =
       if (ren.isEmpty) base - RenameTag else base + (RenameTag -> encodeRenames(ren))
-    commitMeta(spark, root, st, newTags, graceMs, op = "drop-column")
+    commitMeta(spark, root, st, newTags, op = "drop-column")
   }
 
   /** Add a nullable column WITHOUT touching a single data file: one
@@ -2683,12 +2765,10 @@ object ManifestTable {
     * are supported (NOT NULL over existing rows would be instantly
     * violated; a DEFAULT is a rewrite). */
   def addColumn(spark: SparkSession, root: String, name: String,
-                dataType: org.apache.spark.sql.types.DataType,
-                graceMs: Long = 60000L): Long = {
+                dataType: org.apache.spark.sql.types.DataType): Long = {
     require(name.nonEmpty && !name.contains('.'),
       s"addColumn: bad column name '$name' (nested fields are not supported)")
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val logicalCols = readState(spark, root, st).columns.toSeq
     require(!logicalCols.contains(name),
       s"addColumn: column '$name' already exists in $root")
@@ -2710,7 +2790,7 @@ object ManifestTable {
       }
     val widened = declared.add(name, dataType, nullable = true)
     commitMeta(spark, root, st,
-      st.tags + (SchemaTag -> widened.json), graceMs, op = "add-column")
+      st.tags + (SchemaTag -> widened.json), op = "add-column")
   }
 
   /** Declared-but-unwritten columns padded as typed NULLs: after
@@ -2768,20 +2848,19 @@ object ManifestTable {
 
   /** Opt the table in/out of the change feed (metadata-only commit).
     * Only mutations AFTER the enabling commit carry change records. */
-  def setChangeFeed(spark: SparkSession, root: String, enabled: Boolean,
-                    graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+  def setChangeFeed(spark: SparkSession, root: String, enabled: Boolean): Long = {
+    val st = head(spark, root)
     val newTags =
       if (enabled) st.tags + (CdfEnabledTag -> "true") else st.tags - CdfEnabledTag
     if (newTags == st.tags) st.version
-    else commitMeta(spark, root, st, newTags, graceMs, op = "meta")
+    else commitMeta(spark, root, st, newTags)
   }
 
   /** Write `changes` (LOGICAL columns + [[ChangeTypeCol]]) as a commit's
     * change dataset — physical names in the file, like any generation.
     * None when the feed is off or the mutation touched zero rows; the
-    * caller deletes the dir on a lost claim. The change frame is a
+    * dir rides the manifest's `cdf=` line, so [[commit]] deletes it on a
+    * lost claim. The change frame is a
     * second evaluation of the mutation's matched set: with a
     * non-deterministic predicate it can disagree with the committed
     * rewrite (the same caveat as the rewrite itself — the MoR paths'
@@ -2983,14 +3062,17 @@ object ManifestTable {
           fs.map(f => new Path(base, f.relPath).toString))
         if (!withPositions) df
         else {
-          // file_path is the reader's fully-qualified URI; the
-          // manifest speaks root-relative paths — strip the
-          // qualified BASE root prefix + '/' (substring is 1-based),
-          // so a clone's inherited files keep their manifest paths
+          // file_path is the reader's fully-qualified, URL-ENCODED URI
+          // (a space reads %20, hive's %3A escape reads %253A); the
+          // manifest speaks root-relative DECODED paths, as
+          // listGeneration derives them from a Path. Decode first ('+'
+          // is a literal in a URI path, not a space), then strip the
+          // qualified BASE root prefix + '/' (substring is 1-based), so
+          // a clone's inherited files keep their manifest paths
           val qualBase = fsOf(spark, base).makeQualified(new Path(base)).toString
           df.select(col("*"),
-            expr(s"substring(_metadata.file_path, ${qualBase.length + 2})")
-              .as(DvRelCol),
+            expr("substring(url_decode(replace(_metadata.file_path, '+', '%2B')), " +
+              s"${qualBase.length + 2})").as(DvRelCol),
             col("_metadata.row_index").as(DvPosCol))
         }
       }
@@ -3106,7 +3188,6 @@ object ManifestTable {
   def createEmpty(spark: SparkSession, root: String,
                   schema: org.apache.spark.sql.types.StructType,
                   partitionCols: Seq[String] = Nil,
-                  graceMs: Long = 60000L,
                   tags: Map[String, String] = Map.empty): Long = {
     require(schema.nonEmpty, s"createEmpty: $root needs at least one column")
     validateTags(tags, Map.empty)
@@ -3147,8 +3228,7 @@ object ManifestTable {
       physParts.contains(f.name) && !genSpecs.exists(_._1 == f.name) &&
         PartitionTypes.SafeTypes.contains(f.dataType))
     val fs = fsOf(spark, root)
-    if (hasCommittedVersion(fs, root))
-      throw new ConcurrentCommitException(root, 1L)
+    refuseReseed(fs, root)
     // ANY partitioned layout defaults to OPTIMIZED WRITES (caller may
     // still set 'write.optimized' = 'false'): a layout column spreads
     // EVERY batch across MANY dirs, so a T-task ingest lands T × P file
@@ -3172,10 +3252,7 @@ object ManifestTable {
        else Map(PartitionTypesTag -> PartitionTypes.toTag(typedParts))) ++
       (if (genSpecs.isEmpty) Map.empty
        else Map(GeneratedTag -> encodeGenerated(genSpecs)))
-    if (!claimOrRecover(fs, root, FullManifest(1L, Seq.empty, allTags, None), graceMs))
-      throw new ConcurrentCommitException(root, 1L)
-    writePointer(fs, root, 1L)
-    1L
+    commit(fs, root, Staged(FullManifest(1L, Seq.empty, allTags, None), Nil))
   }
 
   /** Clone `srcRoot` (optionally a historical `version`) into the new
@@ -3202,8 +3279,7 @@ object ManifestTable {
     *
     * Returns the clone's committed version (always 1). */
   def cloneTable(spark: SparkSession, srcRoot: String, dstRoot: String,
-                 version: Option[Long] = None, deep: Boolean = false,
-                 graceMs: Long = 60000L): Long = {
+                 version: Option[Long] = None, deep: Boolean = false): Long = {
     val srcSt = version match {
       case Some(v) => stateAt(spark, srcRoot, v).getOrElse(
         sys.error(s"cloneTable: $srcRoot has no resolvable version $v"))
@@ -3217,8 +3293,7 @@ object ManifestTable {
     // BOTH modes refuse an existing destination — write() is a
     // full-overwrite API, so without this gate a mistyped DEEP
     // destination would silently replace a live table's content
-    if (hasCommittedVersion(fs, dstRoot))
-      throw new ConcurrentCommitException(dstRoot, 1L)
+    refuseReseed(fs, dstRoot)
     if (deep) {
       val df = version.map(readVersion(spark, srcRoot, _))
         .getOrElse(read(spark, srcRoot))
@@ -3227,7 +3302,7 @@ object ManifestTable {
       val ren = renameMap(srcSt.tags); val dr = dropSet(srcSt.tags)
       val logicalLayout = layoutOf(srcRoot, srcSt)
         .filterNot(dr.contains).map(p => ren.getOrElse(p, p))
-      val v = write(df, dstRoot, logicalLayout, graceMs)
+      val v = write(df, dstRoot, logicalLayout)
       // deep clones carry the data-DESCRIBING metadata shallow clones
       // do (constraints, cdf switch, generated definitions, user
       // properties) — rename/drop mappings are rightly gone (write()
@@ -3250,8 +3325,7 @@ object ManifestTable {
       val dstSt = current(spark, dstRoot).getOrElse(
         sys.error(s"cloneTable: deep clone of $srcRoot committed v$v at " +
           s"$dstRoot but the state does not resolve"))
-      return commitMeta(spark, dstRoot, dstSt, dstSt.tags ++ carried, graceMs,
-        op = "clone")
+      return commitMeta(spark, dstRoot, dstSt, dstSt.tags ++ carried, op = "clone")
     }
     // the chain: this source first, then ITS sources (cloning a clone) —
     // inherited dirs may live anywhere along it
@@ -3264,20 +3338,14 @@ object ManifestTable {
       CloneSourcesTag +
       (CloneSourcesTag -> chain.map(enc).mkString(";")) + (OpTag -> "clone")
     val (manifest, sidecar) = mkSnapshot(spark, dstRoot, 1L, srcSt.files, tags)
-    var committed = false
-    try {
-      if (!claimOrRecover(fs, dstRoot, manifest, graceMs))
-        throw new ConcurrentCommitException(dstRoot, 1L)
-      committed = true
-      writePointer(fs, dstRoot, 1L)
-      log.info(s"cloneTable: $dstRoot v1 shallow-clones $srcRoot " +
-        s"v${srcSt.version} (${srcSt.files.size} files by reference)")
-      1L
-    } finally if (!committed) sidecar.foreach(p => fs.delete(p, true))
+    commit(fs, dstRoot, staged(dstRoot, manifest, Nil, sidecar))
+    log.info(s"cloneTable: $dstRoot v1 shallow-clones $srcRoot " +
+      s"v${srcSt.version} (${srcSt.files.size} files by reference)")
+    1L
   }
 
   def write(df: DataFrame, root: String, partitionCols: Seq[String] = Nil,
-            graceMs: Long = 60000L, maxAttempts: Int = 50,
+            maxAttempts: Int = 50,
             reseedUnresolvable: Boolean = false): Long = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     // PARTITIONED BY entries may be transforms (days(ts), bucket(16, k)):
@@ -3295,8 +3363,8 @@ object ManifestTable {
         Map(GeneratedTag -> encodeGenerated(genSpecs)), root, "overwrite batch")
     val spark = df.sparkSession
     val fs = fsOf(spark, root)
-    // constraint gate against the table's CURRENT declarations; the
-    // claim loop below re-enforces whenever a retry observes a DIFFERENT
+    // constraint gate against the table's CURRENT declarations; each
+    // re-stage below re-enforces whenever a retry observes a DIFFERENT
     // constraint set (a racing addConstraint commits a version, making
     // this writer's first claim lose — the retry must not slip past the
     // new constraint). The CAS mutators get this for free (their retry
@@ -3309,6 +3377,32 @@ object ManifestTable {
         enforceConstraints(dfG, cs, root, "overwrite batch")
         enforcedAgainst = Some(cs)
       }
+    }
+    // claim attempts — lost claims and re-seed-guard retries alike — each
+    // followed by a short backoff; exhausting them fails the overwrite
+    var attempts = 0
+    def backoff(): Unit = {
+      attempts += 1
+      Thread.sleep(100L * math.min(attempts, 5))
+      if (attempts >= maxAttempts)
+        sys.error(s"manifest table $root: could not claim a version after $maxAttempts attempts")
+    }
+    // v1 re-seed guard: current()=None while COMMITTED versions exist
+    // means resolution transiently failed (e.g. a sidecar read during
+    // object-store throttling degrades soft) — claiming v1 then would
+    // succeed below the vacuum floor and the pointer fast path would
+    // serve the fresh v1, shadowing every newer commit. Treat it as a
+    // transient and retry the read instead of seeding.
+    def resolve(): Option[State] = {
+      var prev = current(spark, root)
+      while (prev.isEmpty && !reseedUnresolvable && hasCommittedVersion(fs, root)) {
+        log.warn(s"manifest table $root: current() resolved to None but committed " +
+          "versions exist — refusing to re-seed v1; retrying resolution " +
+          "(pass reseedUnresolvable=true to override a PERMANENTLY broken log)")
+        backoff()
+        prev = current(spark, root)
+      }
+      prev
     }
     val priorTags = current(spark, root).map(_.tags)
     priorTags.foreach(gate)
@@ -3329,99 +3423,73 @@ object ManifestTable {
       }
     val optimizedTag = derivedOptimizedTag(priorTags)
     val (gen, entries) =
-      writeGeneration(normalizePartitionCols(dfG, physParts), root, physParts,
+      writeGeneration(normalizePartitionCols(dfG, physParts, Map.empty), root, physParts,
         // ONLY the optimized-write switch carries into an overwrite's
         // generation write: the full prior tag map would physicalize
         // the NEW frame under the OLD (dying) rename mappings
         optimizedTag)
     val (proto, sidecar) = mkSnapshot(spark, root, 1L, entries, Map.empty)
-    var committed = false
-    try {
-      var attempts = 0
-      while (attempts < maxAttempts) {
-        val prev = current(spark, root)
-        // v1 re-seed guard: current()=None while COMMITTED versions exist
-        // means resolution transiently failed (e.g. a sidecar read during
-        // object-store throttling degrades soft) — claiming v1 then would
-        // succeed below the vacuum floor and the pointer fast path would
-        // serve the fresh v1, shadowing every newer commit. Treat it as a
-        // transient and retry the read instead of seeding.
-        if (prev.isEmpty && !reseedUnresolvable && hasCommittedVersion(fs, root)) {
-          log.warn(s"manifest table $root: current() resolved to None but committed " +
-            "versions exist — refusing to re-seed v1; retrying resolution " +
-            "(pass reseedUnresolvable=true to override a PERMANENTLY broken log)")
-          attempts += 1
-          Thread.sleep(100L * math.min(attempts, 5))
-        } else {
-          // explicit reseed of an unresolvable log: claim ABOVE the newest
-          // claimed slot (committed or not), never v1 — an old retained
-          // manifest must not shadow the fresh head
-          val v = prev.map(_.version).getOrElse(
-            if (reseedUnresolvable) newestClaimedVersion(fs, root) else 0L) + 1
-          // previous tags carry forward (e.g. the stream sink's last-applied
-          // batch id — losing it would re-open the replay double-apply)
-          prev.foreach(p => gate(p.tags)) // re-gate on a changed constraint set
-          // a full overwrite replaces every data file: the incoming frame's
-          // names ARE the new physical schema, so rename/drop mappings die here
-          // … and the schema record refreshes to the NEW frame (a stale
-          // create-time schema would mis-describe a later zero-file state)
-          val base = prev.map(_.tags).getOrElse(Map.empty) -
-            RenameTag - DropTag - LayoutTag - GeneratedTag - PartitionTypesTag +
-            (OpTag -> "overwrite") +
-            (SchemaTag -> normalizePartitionCols(dfG, physParts).schema.json)
-          // the typed-partition declaration RE-DERIVES from the incoming
-          // frame, same rule as createEmpty (a type change is a rewrite —
-          // this is the rewrite): a typed table overwritten with a typed
-          // frame stays typed (dropping the tag here would silently flip
-          // DATE/INT read-back to STRING mid-lifetime); a string-valued
-          // frame derives nothing and lands string-pinned as before
-          val typedOverwrite = dfG.schema.fields.filter(f =>
-            physParts.contains(f.name) && !genSpecs.exists(_._1 == f.name) &&
-              PartitionTypes.SafeTypes.contains(f.dataType))
-          // the optimized-write posture RE-DERIVES from the retry's fresh
-          // tags: a concurrent commit flipping write.optimized between the
-          // initial read (which legitimately shaped THIS generation's
-          // write) and a retried claim must not be reverted by stamping
-          // the stale pre-race value — the committed tag governs FUTURE
-          // writes and follows the race, like the constraint re-gate
-          // above (r19 ADVICE)
-          val optimizedTagNow = derivedOptimizedTag(prev.map(_.tags))
-          val tags = (if (physParts.isEmpty) base
-                      else base + (LayoutTag -> physParts.mkString(","))) ++
-            optimizedTagNow ++
-            (if (typedOverwrite.isEmpty) Map.empty
-             else Map(PartitionTypesTag ->
-               PartitionTypes.toTag(typedOverwrite.toIndexedSeq))) ++
-            (if (genSpecs.isEmpty) Map.empty
-             else Map(GeneratedTag -> encodeGenerated(genSpecs)))
-          val manifest = restamp(proto, v) match {
-            case f: FullManifest => f.copy(tags = tags)
-            case r: SnapshotRef  => r.copy(tags = tags)
-            case d               => d
-          }
-          if (claimOrRecover(fs, root, manifest, graceMs)) {
-            committed = true
-            writePointer(fs, root, v)
-            return v
-          }
-          attempts += 1
-          Thread.sleep(100L * math.min(attempts, 5))
-        }
+    // the written snapshot, stamped at `prev`'s next version with its tags
+    def stage(prev: Option[State]): Staged = {
+      // explicit reseed of an unresolvable log: claim ABOVE the newest
+      // claimed slot (committed or not), never v1 — an old retained
+      // manifest must not shadow the fresh head
+      val v = prev.map(_.version).getOrElse(
+        if (reseedUnresolvable) newestClaimedVersion(fs, root) else 0L) + 1
+      // previous tags carry forward (e.g. the stream sink's last-applied
+      // batch id — losing it would re-open the replay double-apply)
+      prev.foreach(p => gate(p.tags)) // re-gate on a changed constraint set
+      // a full overwrite replaces every data file: the incoming frame's
+      // names ARE the new physical schema, so rename/drop mappings die here
+      // … and the schema record refreshes to the NEW frame (a stale
+      // create-time schema would mis-describe a later zero-file state)
+      val base = prev.map(_.tags).getOrElse(Map.empty) -
+        RenameTag - DropTag - LayoutTag - GeneratedTag - PartitionTypesTag +
+        (OpTag -> "overwrite") +
+        (SchemaTag -> normalizePartitionCols(dfG, physParts, Map.empty).schema.json)
+      // the typed-partition declaration RE-DERIVES from the incoming
+      // frame, same rule as createEmpty (a type change is a rewrite —
+      // this is the rewrite): a typed table overwritten with a typed
+      // frame stays typed (dropping the tag here would silently flip
+      // DATE/INT read-back to STRING mid-lifetime); a string-valued
+      // frame derives nothing and lands string-pinned as before
+      val typedOverwrite = dfG.schema.fields.filter(f =>
+        physParts.contains(f.name) && !genSpecs.exists(_._1 == f.name) &&
+          PartitionTypes.SafeTypes.contains(f.dataType))
+      // the optimized-write posture RE-DERIVES from the retry's fresh
+      // tags: a concurrent commit flipping write.optimized between the
+      // initial read (which legitimately shaped THIS generation's
+      // write) and a retried claim must not be reverted by stamping
+      // the stale pre-race value — the committed tag governs FUTURE
+      // writes and follows the race, like the constraint re-gate
+      // above (r19 ADVICE)
+      val optimizedTagNow = derivedOptimizedTag(prev.map(_.tags))
+      val tags = (if (physParts.isEmpty) base
+                  else base + (LayoutTag -> physParts.mkString(","))) ++
+        optimizedTagNow ++
+        (if (typedOverwrite.isEmpty) Map.empty
+         else Map(PartitionTypesTag ->
+           PartitionTypes.toTag(typedOverwrite.toIndexedSeq))) ++
+        (if (genSpecs.isEmpty) Map.empty
+         else Map(GeneratedTag -> encodeGenerated(genSpecs)))
+      val manifest = restamp(proto, v) match {
+        case f: FullManifest => f.copy(tags = tags)
+        case r: SnapshotRef  => r.copy(tags = tags)
+        case d               => d
       }
-      sys.error(s"manifest table $root: could not claim a version after $maxAttempts attempts")
-    } finally {
-      // never-orphan-yourself, same as the upsert/compact conflict paths —
-      // and not only on loop exhaustion: a transient IO error thrown from
-      // current()/hasCommittedVersion (readRaw rethrows non-FileNotFound
-      // failures) must also reclaim the pre-written generation + sidecar,
-      // or every failed overwrite leaks a generation only
-      // vacuum(deleteOrphans = true) — unsafe with writers in flight —
-      // could ever reclaim
-      if (!committed) {
-        scala.util.Try(fs.delete(new Path(root, gen), true))
-        sidecar.foreach(p => scala.util.Try(fs.delete(p, true)))
-      }
+      staged(root, manifest, Seq(gen), sidecar)
     }
+    // the first claim stamps a head read AFTER the generation write, so a
+    // rival commit landing during the write costs no lost claim; staging
+    // it can still fail (the re-seed guard exhausting, a constraint the
+    // fresh head added), and that exit drops the generation as well
+    val first =
+      try stage(resolve())
+      catch { case e: Throwable =>
+        discard(fs, staged(root, proto, Seq(gen), sidecar).written); throw e }
+    // no read dependency: a lost claim re-stamps the same generation at
+    // the new head's next version
+    commit(fs, root, first, _ => { backoff(); Some(stage(resolve())) })
   }
 
   /** Highest version with ANY claim file in the log (committed or not) —
@@ -3441,8 +3509,7 @@ object ManifestTable {
     * blind writer (INSERT OVERWRITE, [[append]]) must preserve so its
     * generation partitions like every other. */
   def partitionLayout(spark: SparkSession, root: String): Seq[String] =
-    layoutOf(root, current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version")))
+    layoutOf(root, head(spark, root))
 
   /** [[partitionLayout]] for an explicit state — what a PINNED
     * (time-travel) scan must use: the current layout may have evolved
@@ -3518,11 +3585,10 @@ object ManifestTable {
   }
 
   def append(spark: SparkSession, batch: DataFrame, root: String,
-             graceMs: Long = 60000L,
              checkpointInterval: Int = DefaultCheckpointInterval,
              tags: Map[String, String] = Map.empty,
              partitionCols: Seq[String] = Nil): Long =
-    appendFrom(spark, batch, root, graceMs, checkpointInterval, tags,
+    appendFrom(spark, batch, root, checkpointInterval, tags,
       partitionCols, current(spark, root))
 
   /** [[append]] body against an already-read `prior` state — the
@@ -3532,18 +3598,15 @@ object ManifestTable {
     * INSERT-INTO path never reaches here with None — resolution fails
     * first on a table that does not exist). */
   private def appendFrom(spark: SparkSession, batch: DataFrame, root: String,
-                         graceMs: Long, checkpointInterval: Int,
+                         checkpointInterval: Int,
                          tags: Map[String, String],
                          partitionCols: Seq[String],
                          prior: Option[State]): Long = {
     validateTags(tags, prior.map(_.tags).getOrElse(Map.empty))
     val fs = fsOf(spark, root)
     val st = prior.getOrElse {
-      // v1 re-seed guard, same as upsertFrom: None with committed
-      // versions in the log is a transient resolution failure
-      if (hasCommittedVersion(fs, root))
-        throw new ConcurrentCommitException(root, 1L)
-      val seeded = normalizePartitionCols(batch, partitionCols)
+      refuseReseed(fs, root)
+      val seeded = normalizePartitionCols(batch, partitionCols, tags)
       // a partitioned v1 bootstrap (streaming-sink seed) defaults to
       // optimized writes, same rule as createEmpty/write() — without it
       // this creation path alone kept the T×P splinter pathology
@@ -3558,13 +3621,7 @@ object ManifestTable {
         seedTags.filter(_._1 == OptimizedWriteProp))
       val (m1, sidecar1) = mkSnapshot(spark, root, 1L, entries,
         seedTags + (OpTag -> "append"))
-      if (!claimOrRecover(fs, root, m1, graceMs)) {
-        fs.delete(new Path(root, gen), true)
-        sidecar1.foreach(fs.delete(_, true))
-        throw new ConcurrentCommitException(root, 1L)
-      }
-      writePointer(fs, root, 1L)
-      return 1L
+      return commit(fs, root, staged(root, m1, Seq(gen), sidecar1))
     }
     val aligned = alignToTable(batch, root, st, "append batch")
     val partKeys = layoutOf(root, st)
@@ -3572,7 +3629,7 @@ object ManifestTable {
       s"append: the table's layout is [${partKeys.mkString(", ")}]; a batch " +
         s"cannot repartition it to [${partitionCols.mkString(", ")}]")
     val (gen, entries) = writeGeneration(
-      normalizePartitionCols(aligned, partKeys), root, partKeys, st.tags)
+      normalizePartitionCols(aligned, partKeys, st.tags), root, partKeys, st.tags)
     // feed rows come from the committed bytes, not a plan re-evaluation
     val cdf = if (!cdfEnabled(st.tags)) None else {
       val written =
@@ -3584,17 +3641,11 @@ object ManifestTable {
     }
     val v = st.version + 1
     val newTags = st.tags ++ tags + (OpTag -> "append")
-    val snapshotting = checkpointInterval <= 1 || v % checkpointInterval == 0
     val (manifest, sidecar) =
-      if (snapshotting) mkSnapshot(spark, root, v, st.files ++ entries, newTags, cdf)
+      if (snapshotDue(v, checkpointInterval))
+        mkSnapshot(spark, root, v, st.files ++ entries, newTags, cdf)
       else (DeltaManifest(v, entries, Seq.empty, newTags, cdf), None)
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      fs.delete(new Path(root, gen), true)
-      sidecar.foreach(fs.delete(_, true))
-      cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-      throw new ConcurrentCommitException(root, v)
-    }
-    if (snapshotting) writePointer(fs, root, v)
+    commit(fs, root, staged(root, manifest, Seq(gen), sidecar))
     maybeAutoCompact(spark, root, st.tags, entries)
     v
   }
@@ -3674,13 +3725,11 @@ object ManifestTable {
     * inserts, so CDC consumers never hit the partition-replace gap
     * [[readChangeFeed]] refuses. */
   def replacePartitions(spark: SparkSession, batch: DataFrame, root: String,
-                        graceMs: Long = 60000L,
                         checkpointInterval: Int = DefaultCheckpointInterval): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val partKeys = layoutOf(root, st)
     if (partKeys.isEmpty)
-      return write(batch, root, Nil, graceMs)
+      return write(batch, root, Nil)
     // mixed partition-spec eras: a partition replaced under the CURRENT
     // spec cannot see old-era rows that logically belong to it — the
     // overwrite would silently keep them next to the replacement.
@@ -3708,9 +3757,10 @@ object ManifestTable {
     val aligned = batchG.select(
       expected.map(c => col(byLower(c.toLowerCase)).as(c)).toIndexedSeq: _*)
     // drift is checked POST-normalization so a string-pinned table keeps
-    // accepting the typed batches normalization strings; layout columns
-    // are therefore expected STRING here — typed-declared ones get their
-    // own PRE-normalization check (the batch must arrive in the declared
+    // accepting the typed batches normalization strings; untyped layout
+    // columns are therefore expected STRING here — typed-declared ones
+    // keep their declared type and get their own check first, with its
+    // own message (the batch must arrive in the declared
     // type, or a stray batch could write a non-canonical directory the
     // typed read-back would null out)
     val typedParts = partitionTypes(st.tags)
@@ -3722,9 +3772,10 @@ object ManifestTable {
         s"table (${typedDrift.mkString("; ")}) — a type change is a rewrite " +
         "(write())")
     val eT = logical.map(f => f.name ->
-      (if (partKeys.contains(f.name)) org.apache.spark.sql.types.StringType
+      (if (partKeys.contains(f.name) && !typedParts.contains(f.name))
+         org.apache.spark.sql.types.StringType
        else f.dataType)).toMap
-    val normalized = normalizePartitionCols(aligned, partKeys)
+    val normalized = normalizePartitionCols(aligned, partKeys, st.tags)
     val drift = normalized.schema
       .filter(f => eT.get(f.name).exists(_ != f.dataType))
       .map(f => s"${f.name}: table=${eT(f.name).sql} batch=${f.dataType.sql}")
@@ -3751,28 +3802,20 @@ object ManifestTable {
     val keep = st.files.filterNot(f => newParts.contains(f.partitionPath))
     val v = st.version + 1
     val newTags = st.tags + (OpTag -> "overwrite")
-    val snapshotting = checkpointInterval <= 1 || v % checkpointInterval == 0
     val (manifest, sidecar) =
-      if (snapshotting) mkSnapshot(spark, root, v, keep ++ entries, newTags, cdf)
+      if (snapshotDue(v, checkpointInterval))
+        mkSnapshot(spark, root, v, keep ++ entries, newTags, cdf)
       else (DeltaManifest(v, entries, retired.map(_.relPath), newTags, cdf), None)
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      fs.delete(new Path(root, gen), true)
-      sidecar.foreach(fs.delete(_, true))
-      cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-      throw new ConcurrentCommitException(root, v)
-    }
-    if (snapshotting) writePointer(fs, root, v)
-    v
+    commit(fs, root, staged(root, manifest, Seq(gen), sidecar))
   }
 
   def upsertDedup(spark: SparkSession, fresh: DataFrame, root: String,
                   keys: Seq[String], order: String,
                   partitionCols: Seq[String] = Nil,
-                  graceMs: Long = 60000L,
                   tags: Map[String, String] = Map.empty,
                   mergeSchema: Boolean = false,
                   checkpointInterval: Int = DefaultCheckpointInterval): Long =
-    upsertFrom(spark, fresh, root, keys, order, partitionCols, graceMs, tags,
+    upsertFrom(spark, fresh, root, keys, order, partitionCols, tags,
       mergeSchema, current(spark, root), checkpointInterval)
 
   /** [[upsertDedup]] with the documented CAS retry loop BUILT IN: on
@@ -3782,48 +3825,28 @@ object ManifestTable {
     * touches), with bounded exponential backoff + jitter between
     * attempts so N racing writers don't re-collide in lockstep. Each
     * losing attempt has already deleted its orphan generation (the
-    * upsert conflict path cleans up before throwing), so retries leak
+    * commit path cleans up before throwing), so retries leak
     * nothing. Throws the last [[ConcurrentCommitException]] after
     * `maxRetries` lost races — under that much sustained contention the
     * caller should serialize its writers instead. */
   def upsertWithRetry(spark: SparkSession, fresh: DataFrame, root: String,
                       keys: Seq[String], order: String,
                       partitionCols: Seq[String] = Nil,
-                      graceMs: Long = 60000L,
                       tags: Map[String, String] = Map.empty,
                       mergeSchema: Boolean = false,
                       maxRetries: Int = 8,
                       baseBackoffMs: Long = 50L,
-                      checkpointInterval: Int = DefaultCheckpointInterval): Long = {
-    require(maxRetries >= 0 && baseBackoffMs >= 0,
-      s"maxRetries/baseBackoffMs must be >= 0, got $maxRetries/$baseBackoffMs")
-    var attempt = 0
-    while (true) {
-      try
-        return upsertDedup(spark, fresh, root, keys, order, partitionCols,
-          graceMs, tags, mergeSchema, checkpointInterval)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          // exponential backoff capped at 64x base, +-20% jitter
-          val backoff = baseBackoffMs << math.min(attempt - 1, 6)
-          val jitter = (backoff * 0.2 *
-            java.util.concurrent.ThreadLocalRandom.current().nextDouble()).toLong
-          log.info(s"manifest table $root: lost CAS race (attempt $attempt/" +
-            s"$maxRetries) — retrying in ${backoff + jitter} ms")
-          Thread.sleep(backoff + jitter)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+                      checkpointInterval: Int = DefaultCheckpointInterval): Long =
+    retryOnConflict(maxRetries, baseBackoffMs)(
+      upsertDedup(spark, fresh, root, keys, order, partitionCols, tags,
+        mergeSchema, checkpointInterval))
 
   /** [[upsertDedup]] body against an already-read `prior` state — the
     * streaming sink reuses its watermark read instead of listing the
     * manifest log twice per micro-batch. */
   private def upsertFrom(spark: SparkSession, fresh: DataFrame, root: String,
                          keys: Seq[String], order: String,
-                         partitionCols: Seq[String], graceMs: Long,
+                         partitionCols: Seq[String],
                          tags: Map[String, String], mergeSchema: Boolean,
                          prior: Option[State],
                          checkpointInterval: Int = DefaultCheckpointInterval): Long = {
@@ -3831,35 +3854,17 @@ object ManifestTable {
     val fs = fsOf(spark, root)
     // string partition columns from the first commit on (see
     // normalizePartitionCols): the dtype check below then compares the
-    // batch against the table's own string read-back consistently.
-    // TYPED-tagged layout columns are exempt: their read-back is the
-    // declared type, so the batch must stay typed through the check AND
-    // through the merge union with the existing (typed) rows — the
-    // generation write renders their dirs canonically from the typed
-    // values (ints and dates have one rendering).
+    // batch against the table's own read-back consistently.
     val freshG = prior.map(p => applyGenerated(fresh, p.tags, root, "upsert batch"))
       .getOrElse(fresh)
-    val typedLayout = prior.map(p => partitionTypes(p.tags)).getOrElse(Map.empty)
-    val freshN = normalizePartitionCols(freshG,
-      partitionCols.filterNot(typedLayout.contains))
+    val freshN = normalizePartitionCols(freshG, partitionCols,
+      prior.map(_.tags).getOrElse(Map.empty))
     prior match {
       case None =>
-        // v1 re-seed guard (mirror of write()'s): a None prior with
-        // committed versions in the log is a TRANSIENT resolution
-        // failure, not an empty table — claiming v1 below the vacuum
-        // floor would shadow every newer commit via the pointer fast
-        // path. Surface as a CAS conflict so upsertWithRetry re-reads.
-        if (hasCommittedVersion(fs, root))
-          throw new ConcurrentCommitException(root, 1L)
+        refuseReseed(fs, root)
         val (gen, entries) = writeGeneration(freshN, root, partitionCols)
         val (m1, sidecar1) = mkSnapshot(spark, root, 1L, entries, tags + (OpTag -> "upsert"))
-        if (!claimOrRecover(fs, root, m1, graceMs)) {
-          fs.delete(new Path(root, gen), true)
-          sidecar1.foreach(fs.delete(_, true))
-          throw new ConcurrentCommitException(root, 1L)
-        }
-        writePointer(fs, root, 1L)
-        1L
+        commit(fs, root, staged(root, m1, Seq(gen), sidecar1))
       case Some(st) =>
         // a partition layout CHANGE between commits would make the
         // carry-forward filter miss (old files kept alongside a full
@@ -4000,8 +4005,6 @@ object ManifestTable {
         // checkpointInterval-th version snapshots so resolution chains
         // stay short. Unpartitioned upserts rewrite the whole table
         // anyway (carried is empty) — a snapshot IS the smaller record.
-        val snapshotting = carried.isEmpty ||
-          checkpointInterval <= 1 || v % checkpointInterval == 0
         val removesAll = {
           val keptPaths = keep.map(_.relPath).toSet
           st.files.collect {
@@ -4009,28 +4012,30 @@ object ManifestTable {
           }
         }
         val (manifest, sidecar) =
-          if (snapshotting) mkSnapshot(spark, root, v, keep ++ entries, newTags, cdf)
+          if (carried.isEmpty || snapshotDue(v, checkpointInterval))
+            mkSnapshot(spark, root, v, keep ++ entries, newTags, cdf)
           else (DeltaManifest(v, entries, removesAll, newTags, cdf), None)
-        if (claimOrRecover(fs, root, manifest, graceMs)) {
-          if (snapshotting) writePointer(fs, root, v)
-          v
-        } else {
-          // lost the CAS race. Before recomputing the whole merge (the
-          // retry loop's job), try the optimistic-concurrency rebase: if
-          // the rival's commits are LOGICALLY disjoint from this one,
-          // the already-written generation re-claims at the new head.
-          sidecar.foreach(fs.delete(_, true)) // a rebase recommits as a delta
-          val rebased =
-            if (carried.nonEmpty)
-              rebaseDeltaUpsert(spark, fs, root, st, newParts, entries,
-                removesAll, tags, graceMs, cdf)
-            else None // unpartitioned upserts merge the FULL table: any rival invalidates
-          rebased.getOrElse {
-            fs.delete(new Path(root, gen), true)
-            cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-            throw new ConcurrentCommitException(root, v)
-          }
+        // lost the CAS race: before recomputing the whole merge (the
+        // retry loop's job), try the optimistic-concurrency rebase — if
+        // the rival's commits are LOGICALLY disjoint from this one, the
+        // already-written generation re-claims at the new head (as a
+        // delta, so the sidecar goes). Unpartitioned upserts merge the
+        // FULL table: any rival invalidates them.
+        var rebases = 0
+        val committed = commit(fs, root, staged(root, manifest, Seq(gen), sidecar), _ =>
+          if (carried.isEmpty || rebases >= 5) None
+          else {
+            rebases += 1
+            rebaseDeltaUpsert(spark, root, st, newParts, entries, removesAll, tags, cdf)
+              .map(staged(root, _, Seq(gen)))
+          })
+        if (committed != v) {
+          log.info(s"manifest table $root: lost claim at v$v rebased onto " +
+            s"v${committed - 1} (rival commits disjoint from ${newParts.size} " +
+            "touched partitions)")
+          rebaseCount.incrementAndGet()
         }
+        committed
     }
   }
 
@@ -4055,42 +4060,29 @@ object ManifestTable {
     * Any doubt returns None and the caller falls back to the recompute
     * retry. At high ingest concurrency this is the difference between
     * N writers to N partitions serializing on redundant rewrites and
-    * them serializing only on manifest claims. Always commits a DELTA
-    * (the snapshot cadence resumes on later commits). */
-  private def rebaseDeltaUpsert(spark: SparkSession, fs: FileSystem,
-                                root: String, base: State,
+    * them serializing only on manifest claims. Always a DELTA at the new
+    * head's next version (the snapshot cadence resumes on later
+    * commits); [[upsertFrom]] claims it through [[commit]], up to five
+    * times. */
+  private def rebaseDeltaUpsert(spark: SparkSession, root: String, base: State,
                                 touchedParts: Set[String],
                                 entries: Seq[FileEntry], removes: Seq[String],
                                 userTags: Map[String, String],
-                                graceMs: Long,
-                                cdf: Option[(String, Long)] = None): Option[Long] = {
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val st2 = current(spark, root).getOrElse(return None)
-      def partFiles(s: State) =
-        s.files.filter(f => touchedParts.contains(f.partitionPath))
-          .map(f => (f.relPath, f.bytes, f.dv)).toSet
-      val disjoint = partFiles(st2) == partFiles(base)
-      def constraintsOf(t: Map[String, String]) =
-        t.view.filterKeys(_.startsWith(ConstraintTagPrefix)).toMap
-      val constraintsSame = constraintsOf(st2.tags) == constraintsOf(base.tags)
-      val tagsOk = scala.util.Try(validateTags(userTags, st2.tags)).isSuccess
-      if (!disjoint || !constraintsSame || !tagsOk) return None
-      val v2 = st2.version + 1
-      // the cdf diff stays exact: disjointness proved the touched
-      // partitions' file sets untouched by the rival
-      val m = DeltaManifest(v2, entries, removes,
-        st2.tags ++ userTags + (OpTag -> "upsert"), cdf)
-      if (claimOrRecover(fs, root, m, graceMs)) {
-        log.info(s"manifest table $root: lost claim at v${base.version + 1} " +
-          s"rebased onto v${st2.version} (rival commits disjoint from " +
-          s"${touchedParts.size} touched partitions)")
-        rebaseCount.incrementAndGet()
-        return Some(v2)
-      }
-    }
-    None
+                                cdf: Option[(String, Long)]): Option[Manifest] = {
+    val st2 = current(spark, root).getOrElse(return None)
+    def partFiles(s: State) =
+      s.files.filter(f => touchedParts.contains(f.partitionPath))
+        .map(f => (f.relPath, f.bytes, f.dv)).toSet
+    val disjoint = partFiles(st2) == partFiles(base)
+    def constraintsOf(t: Map[String, String]) =
+      t.view.filterKeys(_.startsWith(ConstraintTagPrefix)).toMap
+    val constraintsSame = constraintsOf(st2.tags) == constraintsOf(base.tags)
+    val tagsOk = scala.util.Try(validateTags(userTags, st2.tags)).isSuccess
+    if (!disjoint || !constraintsSame || !tagsOk) None
+    // the cdf diff stays exact: disjointness proved the touched
+    // partitions' file sets untouched by the rival
+    else Some(DeltaManifest(st2.version + 1, entries, removes,
+      st2.tags ++ userTags + (OpTag -> "upsert"), cdf))
   }
 
   /** Default snapshot cadence for partitioned upserts: resolution reads
@@ -4102,12 +4094,10 @@ object ManifestTable {
     * shrinks with the files. Compare-and-swap like [[upsertDedup]].
     * Always commits a FULL snapshot (it rewrites every file anyway) and
     * advances the `_last_checkpoint` pointer. */
-  def compact(spark: SparkSession, root: String, targetFileMB: Int = 512,
-              graceMs: Long = 60000L): Long = {
+  def compact(spark: SparkSession, root: String, targetFileMB: Int = 512): Long = {
     require(targetFileMB > 0, s"compact: targetFileMB must be > 0, got $targetFileMB")
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val df = readState(spark, root, st)
     val bytes = st.files.map(_.bytes).sum
     // partition keys: the files' single recorded layout — or, post
@@ -4120,7 +4110,7 @@ object ManifestTable {
     val micros = withMicrosTimestamps(physicalizeDf(df, st.tags))
     Writers.sizedRewrite(micros.sparkSession, micros, bytes, keys, targetFileMB, genPath.toString)
     val entries = listGeneration(spark, root, gen, st.tags)
-    commitRewrite(spark, fs, root, st, gen, entries, graceMs)
+    commitRewrite(spark, fs, root, st, gen, entries)
   }
 
   /** Copy-on-write DELETE (the Delta/Iceberg `DELETE WHERE` role): drop
@@ -4140,9 +4130,8 @@ object ManifestTable {
     * consumers that must propagate deletes should treat op="delete"
     * windows like "overwrite" ones (re-bootstrap; see the model walk). */
   def delete(spark: SparkSession, root: String,
-             predicate: org.apache.spark.sql.Column,
-             graceMs: Long = 60000L): Long =
-    rewriteMatching(spark, root, predicate, "delete", graceMs)(
+             predicate: org.apache.spark.sql.Column): Long =
+    rewriteMatching(spark, root, predicate, "delete")(
       // keep rows where the predicate is FALSE or NULL
       df => df.filter(!coalesce(predicate, lit(false))),
       df => df.filter(coalesce(predicate, lit(false)))
@@ -4163,11 +4152,9 @@ object ManifestTable {
     * from the WRITTEN generation, same nondeterminism guard as
     * [[append]]. */
   def replaceWhere(spark: SparkSession, batch: DataFrame, root: String,
-                   predicate: org.apache.spark.sql.Column,
-                   graceMs: Long = 60000L): Long = {
+                   predicate: org.apache.spark.sql.Column): Long = {
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val aligned = alignToTable(batch, root, st, "replaceWhere batch")
     val outside = aligned.filter(!coalesce(predicate, lit(false)))
     require(outside.isEmpty,
@@ -4183,7 +4170,7 @@ object ManifestTable {
         val partKeys = rewriteLayout(root, st, touched)
         val touchedDf = readState(spark, root, st.copy(files = touched))
         val kept = normalizePartitionCols(
-          touchedDf.filter(!coalesce(predicate, lit(false))), partKeys)
+          touchedDf.filter(!coalesce(predicate, lit(false))), partKeys, st.tags)
         if (kept.isEmpty) (Seq.empty[FileEntry], None)
         else {
           val (g, es) = writeGeneration(kept, root, partKeys, st.tags)
@@ -4195,7 +4182,7 @@ object ManifestTable {
       if (aligned.isEmpty) (Seq.empty[FileEntry], None)
       else {
         val (g, es) = writeGeneration(
-          normalizePartitionCols(aligned, layout), root, layout, st.tags)
+          normalizePartitionCols(aligned, layout, st.tags), root, layout, st.tags)
         (es, Some(g))
       }
     val entries = keptEntries ++ batchEntries
@@ -4224,13 +4211,7 @@ object ManifestTable {
     val v = st.version + 1
     val manifest = DeltaManifest(v, entries, touched.map(_.relPath),
       st.tags + (OpTag -> "replace-where"), cdf)
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      keptGen.foreach(g => fs.delete(new Path(root, g), true))
-      batchGen.foreach(g => fs.delete(new Path(root, g), true))
-      cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-      throw new ConcurrentCommitException(root, v)
-    }
-    v
+    commit(fs, root, staged(root, manifest, keptGen.toSeq ++ batchGen))
   }
 
   /** SQL `ALTER TABLE … SET/UNSET TBLPROPERTIES`: user properties ride
@@ -4249,10 +4230,8 @@ object ManifestTable {
 
   def setTableProperties(spark: SparkSession, root: String,
                          set: Map[String, String],
-                         unset: Seq[String] = Nil,
-                         graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+                         unset: Seq[String] = Nil): Long = {
+    val st = head(spark, root)
     val guarded = Seq(SchemaTag, LayoutTag, RenameTag, DropTag, CloneSourcesTag,
       GeneratedTag, EvolvedTag)
     (set.keys ++ unset).foreach { k =>
@@ -4272,7 +4251,7 @@ object ManifestTable {
     validateTags(set, st.tags) // refuses constraint./bloom. SETs + separators
     val newTags = (st.tags ++ set) -- unset
     if (newTags == st.tags) st.version
-    else commitMeta(spark, root, st, newTags, graceMs, op = "meta")
+    else commitMeta(spark, root, st, newTags)
   }
 
   /** SQL `TRUNCATE TABLE`: retire every live file in ONE O(metadata)
@@ -4284,9 +4263,8 @@ object ManifestTable {
     * as a delete — a full scan, the price of an exact feed (Delta's
     * unqualified DELETE pays the same). History and time travel keep
     * every pre-truncate version readable until vacuumed. */
-  def truncate(spark: SparkSession, root: String, graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+  def truncate(spark: SparkSession, root: String): Long = {
+    val st = head(spark, root)
     if (st.files.isEmpty) return st.version // already empty
     val fs = fsOf(spark, root)
     val withSchema = st.tags.get(SchemaTag) match {
@@ -4306,12 +4284,8 @@ object ManifestTable {
       writeCdf(spark, root, st.tags,
         readState(spark, root, st).withColumn(ChangeTypeCol, lit("delete")))
     val v = st.version + 1
-    val manifest = DeltaManifest(v, Seq.empty, st.files.map(_.relPath),
-      ensured + (OpTag -> "truncate"), cdf)
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-      throw new ConcurrentCommitException(root, v)
-    }
+    commit(fs, root, staged(root, DeltaManifest(v, Seq.empty, st.files.map(_.relPath),
+      ensured + (OpTag -> "truncate"), cdf), Nil))
     log.info(s"manifest table $root: truncate retired ${st.files.size} files at v$v")
     v
   }
@@ -4337,11 +4311,9 @@ object ManifestTable {
     * (or any rewrite — compact/cluster/upsert-touch) folds the DVs in,
     * and [[statsOnly]] loses exactness while any DV is live. */
   def deleteMoR(spark: SparkSession, root: String,
-                predicate: org.apache.spark.sql.Column,
-                graceMs: Long = 60000L): Long = {
+                predicate: org.apache.spark.sql.Column): Long = {
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val touched = DataSkipping.prune(st.files,
       physicalizeCol(predicate, st.tags), partitionTypes(st.tags))
     if (touched.isEmpty) return st.version // provably nothing to do
@@ -4367,12 +4339,7 @@ object ManifestTable {
         val v = st.version + 1
         val manifest = DeltaManifest(v, dv.adds, dv.removes,
           st.tags + (OpTag -> "delete"), cdf)
-        if (!claimOrRecover(fs, root, manifest, graceMs)) {
-          fs.delete(new Path(root, dv.dir), true)
-          cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-          throw new ConcurrentCommitException(root, v)
-        }
-        v
+        commit(fs, root, staged(root, manifest, Seq(dv.dir)))
     }
   }
 
@@ -4385,12 +4352,10 @@ object ManifestTable {
     * non-deterministic predicate cannot tear the two apart. */
   def updateMoR(spark: SparkSession, root: String,
                 predicate: org.apache.spark.sql.Column,
-                set: Map[String, org.apache.spark.sql.Column],
-                graceMs: Long = 60000L): Long = {
+                set: Map[String, org.apache.spark.sql.Column]): Long = {
     require(set.nonEmpty, "updateMoR: need at least one column -> expression")
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val touched = DataSkipping.prune(st.files,
       physicalizeCol(predicate, st.tags), partitionTypes(st.tags))
     if (touched.isEmpty) return st.version
@@ -4413,7 +4378,7 @@ object ManifestTable {
         case Some(dv) =>
           val updated = normalizePartitionCols(
             matched.select(dataCols.toIndexedSeq.map(c =>
-              set.get(c).map(_.as(c)).getOrElse(col(c))): _*), partKeys)
+              set.get(c).map(_.as(c)).getOrElse(col(c))): _*), partKeys, st.tags)
           enforceConstraints(updated, st.tags, root, "updateMoR result")
           val (gen, entries) = writeGeneration(updated, root, partKeys, st.tags)
           // tear check, free from the new generation's footer counts:
@@ -4445,13 +4410,7 @@ object ManifestTable {
           val v = st.version + 1
           val manifest = DeltaManifest(v, entries ++ dv.adds, dv.removes,
             st.tags + (OpTag -> "update"), cdf)
-          if (!claimOrRecover(fs, root, manifest, graceMs)) {
-            fs.delete(new Path(root, gen), true)
-            fs.delete(new Path(root, dv.dir), true)
-            cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-            throw new ConcurrentCommitException(root, v)
-          }
-          v
+          commit(fs, root, staged(root, manifest, Seq(gen, dv.dir)))
       }
     } finally matched.unpersist()
   }
@@ -4467,7 +4426,8 @@ object ManifestTable {
     * live rows of `touched`) plus the prior positions of `touched`'s
     * DV'd files — one ref per file always fully describes its
     * deletions. None when nothing new was marked. The dataset lands
-    * BEFORE any commit; the caller deletes it on a lost claim.
+    * BEFORE any commit; the caller stages it so [[commit]] deletes it on
+    * a lost claim.
     *
     * Counts come from reading the WRITTEN dataset back, never from
     * re-evaluating `positions`: the position plan is evaluated exactly
@@ -4525,11 +4485,9 @@ object ManifestTable {
     * slice, not the table. Commits as a REWRITE (rows identical), so
     * incremental readers emit nothing; [[statsOnly]] exactness returns
     * once no live file carries a DV. No-op without DVs. */
-  def materializeDeletes(spark: SparkSession, root: String,
-                         graceMs: Long = 60000L): Long = {
+  def materializeDeletes(spark: SparkSession, root: String): Long = {
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val dvd = st.files.filter(_.dv.nonEmpty)
     if (dvd.isEmpty) return st.version
     val layouts = dvd.map(_.partitionPath.split('/').toSeq
@@ -4548,13 +4506,8 @@ object ManifestTable {
       s"materializeDeletes would leave $root file-less — a full-table clear " +
         "is a rewrite: use write() with the replacement content")
     val v = st.version + 1
-    val manifest = DeltaManifest(v, entries, dvd.map(_.relPath),
-      st.tags + (OpTag -> "rewrite"))
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      gen.foreach(g => fs.delete(new Path(root, g), true))
-      throw new ConcurrentCommitException(root, v)
-    }
-    v
+    commit(fs, root, staged(root, DeltaManifest(v, entries, dvd.map(_.relPath),
+      st.tags + (OpTag -> "rewrite")), gen.toSeq))
   }
 
   /** Copy-on-write UPDATE: for rows matching `predicate`, replace each
@@ -4565,10 +4518,9 @@ object ManifestTable {
     * the rewritten files' adds). */
   def update(spark: SparkSession, root: String,
              predicate: org.apache.spark.sql.Column,
-             set: Map[String, org.apache.spark.sql.Column],
-             graceMs: Long = 60000L): Long = {
+             set: Map[String, org.apache.spark.sql.Column]): Long = {
     require(set.nonEmpty, "update: need at least one column -> expression")
-    rewriteMatching(spark, root, predicate, "update", graceMs)(
+    rewriteMatching(spark, root, predicate, "update")(
       { df =>
         val bad = set.keySet -- df.columns
         require(bad.isEmpty, s"update: columns $bad not in table schema")
@@ -4641,42 +4593,36 @@ object ManifestTable {
     * violating batch leaves no trace. Enforcement cost is O(batch),
     * never O(table). */
   def addConstraint(spark: SparkSession, root: String, name: String,
-                    exprSql: String, graceMs: Long = 60000L): Long = {
+                    exprSql: String): Long = {
     require(name.nonEmpty && !name.exists(c => c == '\t' || c == '\n'),
       s"constraint name must be a non-empty separator-free identifier, got '$name'")
     require(!exprSql.exists(_ == '\n'), "constraint expression must be single-line")
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val live = readState(spark, root, st)
     val bad = live.filter(!coalesce(expr(exprSql).cast("boolean"), lit(true)))
       .limit(1).collect()
     require(bad.isEmpty,
       s"manifest table $root: existing rows violate CHECK ($exprSql), e.g. ${bad.head}")
-    commitMeta(spark, root, st, st.tags + (s"$ConstraintTagPrefix$name" -> exprSql), graceMs)
+    commitMeta(spark, root, st, st.tags + (s"$ConstraintTagPrefix$name" -> exprSql))
   }
 
   /** Remove a CHECK constraint. */
-  def dropConstraint(spark: SparkSession, root: String, name: String,
-                     graceMs: Long = 60000L): Long = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+  def dropConstraint(spark: SparkSession, root: String, name: String): Long = {
+    val st = head(spark, root)
     val key = s"$ConstraintTagPrefix$name"
     require(st.tags.contains(key), s"manifest table $root has no constraint '$name'")
-    commitMeta(spark, root, st, st.tags - key, graceMs)
+    commitMeta(spark, root, st, st.tags - key)
   }
 
   /** Metadata-only commit: a delta with no file changes carrying the new
-    * tag state (op "meta" — invisible to incremental readers). */
+    * tag state (op "meta" — invisible to incremental readers). `written`
+    * names any dataset the tags reference that was written for this
+    * commit (the bloom index). */
   private def commitMeta(spark: SparkSession, root: String, st: State,
-                         tags: Map[String, String], graceMs: Long,
-                         op: String = "meta"): Long = {
-    val fs = fsOf(spark, root)
-    val v = st.version + 1
-    if (!claimOrRecover(fs, root,
-        DeltaManifest(v, Seq.empty, Seq.empty, tags + (OpTag -> op)), graceMs))
-      throw new ConcurrentCommitException(root, v)
-    v
-  }
+                         tags: Map[String, String], op: String = "meta",
+                         written: Seq[Path] = Nil): Long =
+    commit(fsOf(spark, root), root, Staged(
+      DeltaManifest(st.version + 1, Seq.empty, Seq.empty, tags + (OpTag -> op)), written))
 
   /** Refuse `df` if any row violates a declared constraint — called by
     * every data-committing path on its incoming/changed rows before the
@@ -4760,8 +4706,7 @@ object ManifestTable {
                            keys: Seq[String], maxKeys: Int, opName: String): MergePrep = {
     require(keys.nonEmpty, s"$opName: need at least one key column")
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val target = readState(spark, root, st)
     require(keys.forall(target.columns.contains) && keys.forall(source.columns.contains),
       s"$opName: keys $keys must exist on both sides")
@@ -4789,7 +4734,7 @@ object ManifestTable {
     // a generated layout derives on the source side too: inserts land in
     // their day/bucket partition without the caller spelling it
     val srcN = normalizePartitionCols(
-      applyGenerated(source, st.tags, root, s"$opName source"), partKeys)
+      applyGenerated(source, st.tags, root, s"$opName source"), partKeys, st.tags)
     locally { // same schema discipline as upserts: no silent coercion
       val tT = target.schema.map(f => f.name -> f.dataType).toMap
       val drift = srcN.schema.filter(f => tT.get(f.name).exists(_ != f.dataType))
@@ -4803,7 +4748,6 @@ object ManifestTable {
   def merge(spark: SparkSession, root: String, source: DataFrame,
             keys: Seq[String], whenMatched: WhenMatched = MatchUpdateAll,
             insertUnmatched: Boolean = true, maxKeys: Int = 100000,
-            graceMs: Long = 60000L,
             notMatchedBySource: Option[WhenNotMatchedBySource] = None): Long = {
     val MergePrep(fs, st, target, touchedPruned, partKeys, srcN, overflow) =
       prepareMerge(spark, root, source, keys, maxKeys, "merge")
@@ -4884,7 +4828,7 @@ object ManifestTable {
           keys.map(k => srcN(k) === touchedDf(k)).reduce(_ && _), "left_anti")
           .select(targetCols.map(col): _*)
       }
-    val outRows = normalizePartitionCols(rewritten.unionByName(inserts), partKeys)
+    val outRows = normalizePartitionCols(rewritten.unionByName(inserts), partKeys, st.tags)
     enforceConstraints(outRows, st.tags, root, "merge result")
     val (entries, gen) =
       if (outRows.isEmpty) (Seq.empty[FileEntry], None)
@@ -4927,12 +4871,7 @@ object ManifestTable {
     val v = st.version + 1
     val manifest = DeltaManifest(v, entries, touched.map(_.relPath),
       st.tags + (OpTag -> "merge"), cdf)
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      gen.foreach(g => fs.delete(new Path(root, g), true))
-      cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-      throw new ConcurrentCommitException(root, v)
-    }
-    v
+    commit(fs, root, staged(root, manifest, gen.toSeq))
   }
 
   /** MERGE-ON-READ merge: [[merge]]'s exact semantics (same key
@@ -4951,7 +4890,6 @@ object ManifestTable {
   def mergeMoR(spark: SparkSession, root: String, source: DataFrame,
                keys: Seq[String], whenMatched: WhenMatched = MatchUpdateAll,
                insertUnmatched: Boolean = true, maxKeys: Int = 100000,
-               graceMs: Long = 60000L,
                notMatchedBySource: Option[WhenNotMatchedBySource] = None): Long = {
     // the MoR economics (mark the FEW matched positions, keep bystander
     // bytes) invert under a by-source clause: it acts on every UNmatched
@@ -5009,8 +4947,8 @@ object ManifestTable {
             keys.map(k => srcN(k) === liveTouched(k)).reduce(_ && _), "left_anti")
             .select(targetCols.map(col): _*)
         }
-      val reemitN = normalizePartitionCols(reemit, partKeys)
-      val insertsN = normalizePartitionCols(inserts, partKeys)
+      val reemitN = normalizePartitionCols(reemit, partKeys, st.tags)
+      val insertsN = normalizePartitionCols(inserts, partKeys, st.tags)
       enforceConstraints(reemitN, st.tags, root, "merge result")
       enforceConstraints(insertsN, st.tags, root, "merge result")
       val dvOpt =
@@ -5028,11 +4966,7 @@ object ManifestTable {
       val (insertEntries, insertGen) =
         if (insertsN.isEmpty) (Seq.empty[FileEntry], None)
         else { val (g, es) = writeGeneration(insertsN, root, partKeys, st.tags); (es, Some(g)) }
-      val gens = reemitGen.toSeq ++ insertGen.toSeq
-      def abortAll(): Unit = {
-        gens.foreach(g => fs.delete(new Path(root, g), true))
-        dvOpt.foreach(d => fs.delete(new Path(root, d.dir), true))
-      }
+      val written = reemitGen.toSeq ++ insertGen ++ dvOpt.map(_.dir)
       // tear check — [[updateMoR]]'s hazard, identically: persist is
       // best-effort, so under cache eviction a non-deterministic source
       // re-evaluates between the DV-position pass and the re-emit pass;
@@ -5046,7 +4980,7 @@ object ManifestTable {
           if (counted.size == reemitEntries.size) Some(counted.sum) else None
         val markedRows = dvOpt.map(_.marked).getOrElse(0L)
         if (reemitRows.exists(_ != markedRows)) {
-          abortAll()
+          written.foreach(d => fs.delete(new Path(root, d), true))
           sys.error(s"mergeMoR on $root: re-emitted ${reemitRows.get} rows but " +
             s"marked $markedRows positions — the matched set re-evaluated " +
             "differently between passes (non-deterministic source under cache " +
@@ -5073,12 +5007,7 @@ object ManifestTable {
       }
       val v = st.version + 1
       val manifest = DeltaManifest(v, adds, removes, st.tags + (OpTag -> "merge"), cdf)
-      if (!claimOrRecover(fs, root, manifest, graceMs)) {
-        abortAll()
-        cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-        throw new ConcurrentCommitException(root, v)
-      }
-      v
+      commit(fs, root, staged(root, manifest, written))
     } finally matched.unpersist()
   }
 
@@ -5087,12 +5016,11 @@ object ManifestTable {
     * delta with the given op tag. CAS like every mutator. */
   private def rewriteMatching(spark: SparkSession, root: String,
                               predicate: org.apache.spark.sql.Column,
-                              opName: String, graceMs: Long)
+                              opName: String)
                              (transform: DataFrame => DataFrame,
                               changes: DataFrame => DataFrame): Long = {
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val touched = DataSkipping.prune(st.files,
       physicalizeCol(predicate, st.tags), partitionTypes(st.tags))
     if (touched.isEmpty) return st.version // provably nothing to do
@@ -5105,7 +5033,7 @@ object ManifestTable {
     // normalize partition values on the rewrite output: an update could
     // retype or respell a partition column out from under the string-
     // pinned carry-forward contract
-    val kept = normalizePartitionCols(transform(touchedDf), partKeys)
+    val kept = normalizePartitionCols(transform(touchedDf), partKeys, st.tags)
     if (opName == "update") // delete cannot introduce violations
       enforceConstraints(kept, st.tags, root, "update result")
     // all rows of every touched file removed: commit removes only (an
@@ -5127,12 +5055,7 @@ object ManifestTable {
     val removes = touched.map(_.relPath)
     val v = st.version + 1
     val manifest = DeltaManifest(v, entries, removes, st.tags + (OpTag -> opName), cdf)
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      gen.foreach(g => fs.delete(new Path(root, g), true))
-      cdf.foreach { case (d, _) => fs.delete(new Path(root, d), true) }
-      throw new ConcurrentCommitException(root, v)
-    }
-    v
+    commit(fs, root, staged(root, manifest, gen.toSeq))
   }
 
   /** Incremental compaction — the auto-OPTIMIZE shape: rewrite ONLY the
@@ -5148,12 +5071,11 @@ object ManifestTable {
     * wasting commits. */
   def compactSmallFiles(spark: SparkSession, root: String,
                         smallFileMB: Int = 64, targetFileMB: Int = 512,
-                        minFiles: Int = 2, graceMs: Long = 60000L): Long = {
+                        minFiles: Int = 2): Long = {
     require(smallFileMB > 0 && targetFileMB >= smallFileMB,
       s"need 0 < smallFileMB <= targetFileMB, got $smallFileMB/$targetFileMB")
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val smallBytes = smallFileMB * 1024L * 1024L
     val (small, big) = st.files.partition(_.bytes < smallBytes)
     if (small.sizeIs < minFiles) return st.version
@@ -5167,13 +5089,7 @@ object ManifestTable {
     val v = st.version + 1
     val (manifest, sidecar) = mkSnapshot(spark, root, v, big ++ entries,
       st.tags + (OpTag -> "rewrite"))
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      fs.delete(new Path(root, gen), true)
-      sidecar.foreach(fs.delete(_, true))
-      throw new ConcurrentCommitException(root, v)
-    }
-    writePointer(fs, root, v)
-    v
+    commit(fs, root, staged(root, manifest, Seq(gen), sidecar))
   }
 
   /** One-row table summary (the DESCRIBE DETAIL role): current version,
@@ -5181,8 +5097,7 @@ object ManifestTable {
     * and distinct partition count, declared constraints — driver-side
     * manifest metadata only, no data files touched. */
   def detail(spark: SparkSession, root: String): DataFrame = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val layouts = st.files.map(_.partitionPath.split('/').toSeq
       .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
     val partCols =
@@ -5349,11 +5264,9 @@ object ManifestTable {
     * "restore" windows as re-bootstrap boundaries, exactly like
     * "overwrite" (the model walk pins this recipe). Restoring to the
     * current version is a no-op. */
-  def restore(spark: SparkSession, root: String, version: Long,
-              graceMs: Long = 60000L): Long = {
+  def restore(spark: SparkSession, root: String, version: Long): Long = {
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     if (version == st.version) return st.version
     require(version < st.version,
       s"restore: target version $version is newer than the current ${st.version}")
@@ -5363,12 +5276,7 @@ object ManifestTable {
     val v = st.version + 1
     val (manifest, sidecar) = mkSnapshot(spark, root, v, target.files,
       st.tags + (OpTag -> "restore"))
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      sidecar.foreach(fs.delete(_, true))
-      throw new ConcurrentCommitException(root, v)
-    }
-    writePointer(fs, root, v)
-    v
+    commit(fs, root, staged(root, manifest, Nil, sidecar))
   }
 
   /** Clustered compaction (the Delta OPTIMIZE ZORDER / Iceberg
@@ -5407,12 +5315,11 @@ object ManifestTable {
     * = data-identical: incremental/CDC readers skip it. */
   def optimize(spark: SparkSession, root: String,
                predicate: Option[org.apache.spark.sql.Column] = None,
-               targetFileMB: Int = 512, graceMs: Long = 60000L,
+               targetFileMB: Int = 512,
                zOrderBy: Seq[String] = Nil): Long = {
     require(targetFileMB > 0, s"optimize: targetFileMB must be > 0, got $targetFileMB")
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val scoped = predicate match {
       case None => st.files
       case Some(p) =>
@@ -5492,12 +5399,8 @@ object ManifestTable {
       s"optimize would remove every live row of $root — a full-table clear " +
         "is a rewrite: use write() with the replacement content")
     val v = st.version + 1
-    val manifest = DeltaManifest(v, entries, eligible.map(_.relPath),
-      st.tags + (OpTag -> "rewrite"), None)
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      fs.delete(genPath, true)
-      throw new ConcurrentCommitException(root, v)
-    }
+    commit(fs, root, staged(root, DeltaManifest(v, entries, eligible.map(_.relPath),
+      st.tags + (OpTag -> "rewrite"), None), Seq(gen)))
     log.info(s"optimize($root): packed ${eligible.size} files " +
       s"(${liveBytes} bytes) into ${entries.size}; " +
       s"${st.files.size - eligible.size} carried by reference")
@@ -5505,13 +5408,12 @@ object ManifestTable {
   }
 
   def cluster(spark: SparkSession, root: String, sortCols: Seq[String],
-              targetFileMB: Int = 512, graceMs: Long = 60000L,
+              targetFileMB: Int = 512,
               zOrder: Boolean = false): Long = {
     require(sortCols.nonEmpty, "cluster: sortCols must be non-empty")
     require(targetFileMB > 0, s"cluster: targetFileMB must be > 0, got $targetFileMB")
     val fs = fsOf(spark, root)
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+    val st = head(spark, root)
     val df = readState(spark, root, st)
     val bytes = st.files.map(_.bytes).sum
     val layouts = st.files.map(_.partitionPath.split('/').toSeq
@@ -5545,27 +5447,20 @@ object ManifestTable {
     (if (partKeys.nonEmpty) w.partitionBy(partKeys: _*) else w)
       .parquet(genPath.toString)
     val entries = listGeneration(spark, root, gen, st.tags)
-    commitRewrite(spark, fs, root, st, gen, entries, graceMs)
+    commitRewrite(spark, fs, root, st, gen, entries)
   }
 
-  /** Shared CAS commit for whole-table rewrites ([[compact]]/[[cluster]]):
+  /** Shared commit for whole-table rewrites ([[compact]]/[[cluster]]):
     * full snapshot at version+1 with tags preserved (stream replay
-    * watermark etc.), pointer advance, orphan cleanup on a lost race. */
+    * watermark etc.) through [[commit]]. */
   private def commitRewrite(spark: SparkSession, fs: FileSystem, root: String,
-                            st: State, gen: String, entries: Seq[FileEntry],
-                            graceMs: Long): Long = {
+                            st: State, gen: String, entries: Seq[FileEntry]): Long = {
     val v = st.version + 1
     // "rewrite" marks this commit as data-IDENTICAL (same rows, new
     // files) so incremental readers skip it instead of re-emitting the
     // whole table
     val (manifest, sidecar) = mkSnapshot(spark, root, v, entries, st.tags + (OpTag -> "rewrite"))
-    if (!claimOrRecover(fs, root, manifest, graceMs)) {
-      fs.delete(new Path(root, gen), true)
-      sidecar.foreach(fs.delete(_, true))
-      throw new ConcurrentCommitException(root, v)
-    }
-    writePointer(fs, root, v)
-    v
+    commit(fs, root, staged(root, manifest, Seq(gen), sidecar))
   }
 
   private val StreamBatchTag = "stream_batch"
@@ -5609,7 +5504,7 @@ object ManifestTable {
       // reuse the watermark read as the CAS base — one manifest-log
       // listing per micro-batch, not two
       upsertFrom(spark, batch, root, keys, order, partitionCols,
-        graceMs = 60000L, tags = Map(tagKey -> batchId.toString),
+        tags = Map(tagKey -> batchId.toString),
         mergeSchema = false, prior = prior,
         checkpointInterval = checkpointInterval)
       true
@@ -5642,7 +5537,7 @@ object ManifestTable {
     } else if (batch.isEmpty) {
       false
     } else {
-      appendFrom(spark, batch, root, graceMs = 60000L,
+      appendFrom(spark, batch, root,
         checkpointInterval = checkpointInterval,
         tags = Map(tagKey -> batchId.toString),
         partitionCols = partitionCols, prior = prior)
@@ -5749,9 +5644,8 @@ object ManifestTable {
     * stops failing every scan; size MISMATCHES are never auto-repaired
     * (the bytes are there, losing the reference would be the damage). */
   def fsck(spark: SparkSession, root: String,
-           repair: Boolean = false, graceMs: Long = 60000L): DataFrame = {
-    val st = current(spark, root).getOrElse(
-      sys.error(s"manifest table $root has no committed version"))
+           repair: Boolean = false): DataFrame = {
+    val st = head(spark, root)
     val sources = cloneSources(st.tags)
     val dirs = (st.files.map(_.relPath.takeWhile(_ != '/')) ++
       st.files.flatMap(_.dv.map(_.dir))).distinct
@@ -5811,12 +5705,8 @@ object ManifestTable {
           s"fsck: EVERY live file of $root is missing — refusing to repair " +
             "into an unreadable zero-file table; restore from a backup or " +
             "an earlier version")
-        val fs = fsOf(spark, root)
-        val v = st.version + 1
-        val manifest = DeltaManifest(v, Seq.empty, dead.toSeq.sorted,
-          st.tags + (OpTag -> "fsck-repair"), None)
-        if (!claimOrRecover(fs, root, manifest, graceMs))
-          throw new ConcurrentCommitException(root, v)
+        val v = commit(fsOf(spark, root), root, Staged(DeltaManifest(st.version + 1,
+          Seq.empty, dead.toSeq.sorted, st.tags + (OpTag -> "fsck-repair"), None), Nil))
         log.warn(s"fsck($root): v$v dropped ${dead.size} unreadable file " +
           "reference(s) — the data they named is GONE")
       }

@@ -123,7 +123,7 @@ object Streams {
   def curatedIngest(docs: DataFrame, tsCol: String, textCol: String,
                     watermark: String = "1 hour",
                     minTokens: Int = 20, maxTokens: Int = 100000): DataFrame = {
-    val toks = graft.plans.TextNative.tokens(docs.sparkSession, col(textCol))
+    val toks = graft.plans.TextNative.tokens(col(textCol))
     docs
       .withColumn("content_hash", md5(col(textCol)))
       .withWatermark(tsCol, watermark)
@@ -179,7 +179,7 @@ object Streams {
   def trendingTerms(docs: DataFrame, tsCol: String, textCol: String,
                     window_ : String = "1 minute", watermark: String = "2 minutes",
                     minTokenLen: Int = 2): DataFrame = {
-    val toks = graft.plans.TextNative.tokens(docs.sparkSession, col(textCol))
+    val toks = graft.plans.TextNative.tokens(col(textCol))
     docs
       .withWatermark(tsCol, watermark)
       .select(col(tsCol), explode(toks).as("token"))

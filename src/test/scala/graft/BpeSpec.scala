@@ -30,7 +30,7 @@ class BpeSpec extends SparkSpec {
     val merges = Seq(("l", "l"), ("a", "b"), ("ab", "ll"))
     val got = Seq((1L, "a b l l l a b a b"), (2L, ""), (3L, "ab lll"))
       .toDF("id", "t")
-      .select(col("id"), TextNative.bpeEncode(spark, col("t"), merges).as("e"))
+      .select(col("id"), TextNative.bpeEncode(col("t"), merges).as("e"))
       .as[(Long, Seq[String])].collect().toMap
     // words: [a],[b],[l],[l],[l],[a],[b],[a],[b] — single-char words
     // never merge across word boundaries
@@ -42,8 +42,8 @@ class BpeSpec extends SparkSpec {
     // round-trip: concatenating a word's tokens reproduces the word
     val docs = graft.core.Tables.documents(spark, sf()).limit(50)
     val bad = docs.select(
-        TextNative.tokens(spark, col("text")).as("w"),
-        TextNative.bpeEncode(spark, col("text"), Bpe.PinnedMerges).as("e"))
+        TextNative.tokens(col("text")).as("w"),
+        TextNative.bpeEncode(col("text"), Bpe.PinnedMerges).as("e"))
       .filter(concat_ws("", col("w")) =!= concat_ws("", col("e")))
       .count()
     assert(bad == 0L, "BPE must be lossless: tokens concatenate back to words")
@@ -70,9 +70,9 @@ class BpeSpec extends SparkSpec {
   test("bpeCount is the fused twin of size(bpeEncode) on real documents") {
     val docs = graft.core.Tables.documents(spark, sf()).limit(300)
     val bad = docs.select(
-        size(TextNative.bpeEncode(spark, col("text"), Bpe.PinnedMerges))
+        size(TextNative.bpeEncode(col("text"), Bpe.PinnedMerges))
           .cast("long").as("a"),
-        TextNative.bpeCount(spark, col("text"), Bpe.PinnedMerges).as("b"))
+        TextNative.bpeCount(col("text"), Bpe.PinnedMerges).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(bad == 0L, "graft_bpe_count must equal size(graft_bpe_encode)")
   }
@@ -84,7 +84,7 @@ class BpeSpec extends SparkSpec {
         bpeMerges = Bpe.PinnedMerges)
       .select(col("doc_id"), col("n_tokens")).as[(Long, Long)].collect().toMap
     val direct = d.select(col("doc_id"),
-        size(TextNative.bpeEncode(spark, col("text"), Bpe.PinnedMerges))
+        size(TextNative.bpeEncode(col("text"), Bpe.PinnedMerges))
           .cast("long")).as[(Long, Long)].collect().toMap
     assert(counts == direct)
     // "the" is a single token under the pinned merges (seed corpus is
@@ -109,9 +109,9 @@ class BpeSpec extends SparkSpec {
       (3L, "fast joins and fast filters keep the cluster busy"))
       .toDF("doc_id", "text")
     val both = docs.select(
-      TextNative.bpeEncode(spark, col("text"), big).as("big"),
-      TextNative.bpeEncode(spark, col("text"), Bpe.PinnedMerges).as("small"),
-      TextNative.bpeCount(spark, col("text"), big).as("nbig"),
+      TextNative.bpeEncode(col("text"), big).as("big"),
+      TextNative.bpeEncode(col("text"), Bpe.PinnedMerges).as("small"),
+      TextNative.bpeCount(col("text"), big).as("nbig"),
       size(col("big")).cast("long").as("sbig"))
     // no codegen fallback blow-up: the merge table rides ONE referenced
     // spec string, not a nested expression chain — the plan compiles

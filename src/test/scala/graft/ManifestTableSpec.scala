@@ -95,10 +95,11 @@ class ManifestTableSpec extends SparkSpec {
     val gensAfter = fs.listStatus(new Path(root)).map(_.getPath.getName)
       .filter(_.startsWith("gen-")).toSet
     assert(gensAfter == gensBefore)
-    // once the rival is known dead (grace 0), the same mutation recovers
-    // the slot and lands
+    // once the rival is known dead (older than the claim grace), the same
+    // mutation recovers the slot and lands
+    fs.setTimes(rival, System.currentTimeMillis() - 2 * ManifestTable.ClaimGraceMs, -1)
     ManifestTable.upsertDedup(spark, Seq(("2026-01-01", 2L, 20.0)).toDF("date", "key", "v"),
-      root, Seq("key"), "v", Seq("date"), graceMs = 0L)
+      root, Seq("key"), "v", Seq("date"))
     assert(ManifestTable.current(spark, root).get.version == 2L)
     assert(ManifestTable.read(spark, root).count() == 2)
   }
@@ -167,8 +168,7 @@ class ManifestTableSpec extends SparkSpec {
     out.write("version=1\n".getBytes("UTF-8"))
     out.close()
     val e = intercept[RuntimeException] {
-      ManifestTable.write(Seq((1, "a")).toDF("k", "s"), root,
-        graceMs = 3600000L, maxAttempts = 2)
+      ManifestTable.write(Seq((1, "a")).toDF("k", "s"), root, maxAttempts = 2)
     }
     assert(e.getMessage.contains("could not claim"))
     // the orphan generation was cleaned up (never-orphan-yourself)
@@ -247,16 +247,15 @@ class ManifestTableSpec extends SparkSpec {
     val root = tmp() + "/t"
     ManifestTable.upsertDedup(spark, Seq(("2026-01-01", 1L, 10.0)).toDF("date", "key", "v"),
       root, Seq("key"), "v", Seq("date"))
-    // a FRESH sentinel-less corpse permanently blocks v2 (never past the
-    // huge grace): every CAS attempt loses, the bounded loop gives up
+    // a FRESH sentinel-less corpse permanently blocks v2 (it stays inside
+    // the claim grace): every CAS attempt loses, the bounded loop gives up
     val out = fs.create(new Path(root, f"_manifests/${2L}%020d.txt"), false)
     out.write("version=2\n".getBytes("UTF-8"))
     out.close()
     intercept[ManifestTable.ConcurrentCommitException] {
       ManifestTable.upsertWithRetry(spark,
         Seq(("2026-01-01", 1L, 99.0)).toDF("date", "key", "v"),
-        root, Seq("key"), "v", Seq("date"),
-        graceMs = 3600000L, maxRetries = 2, baseBackoffMs = 1L)
+        root, Seq("key"), "v", Seq("date"), maxRetries = 2, baseBackoffMs = 1L)
     }
     // table unchanged and the failed attempts left no orphan generations
     assert(ManifestTable.current(spark, root).get.version == 1L)

@@ -15,13 +15,12 @@ class NativeExprSpec extends SparkSpec {
       .crossJoin(e.toDF("id_b", "v_b", "l_b").limit(20))
     val diff = pairs.select(
       VectorFunctions.cosine($"v_a", $"v_b").as("hof"),
-      NativeFunctions.cosineFloat(spark, $"v_a", $"v_b").as("native"))
+      NativeFunctions.cosineFloat($"v_a", $"v_b").as("native"))
       .filter($"hof" =!= $"native")
     assert(diff.count() == 0)
   }
 
   test("native cosine is callable from the SQL surface") {
-    NativeFunctions.register(spark)
     val got = spark.sql(
       """SELECT graft_cosine(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)),
         |                    array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))""".stripMargin)
@@ -33,7 +32,7 @@ class NativeExprSpec extends SparkSpec {
     val df = Seq(
       (Array(0.0f, 0.0f), Array(1.0f, 2.0f)),
       (Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f))).toDF("a", "b")
-    val got = df.select(NativeFunctions.cosineFloat(spark, $"a", $"b"))
+    val got = df.select(NativeFunctions.cosineFloat($"a", $"b"))
       .as[Double].collect()
     assert(got(0) == 0.0)
     // truncated to common prefix → parallel vectors (up to fp rounding)
@@ -47,7 +46,7 @@ class NativeExprSpec extends SparkSpec {
       .crossJoin(e.toDF("id_b", "v_b").limit(20))
     val diff = pairs.select(
       VectorFunctions.sqL2($"v_a", $"v_b").as("hof"),
-      NativeFunctions.sqL2Double(spark, $"v_a", $"v_b").as("native"))
+      NativeFunctions.sqL2Double($"v_a", $"v_b").as("native"))
       .filter($"hof" =!= $"native")
     assert(diff.count() == 0)
   }
@@ -56,13 +55,12 @@ class NativeExprSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf("sf0.01"))
     val diff = e.select(
       graft.operators.Ann.signLshSignature($"embedding", 12, 64, 42L).as("hof"),
-      graft.plans.SignLshSignature.signature(spark, $"embedding", 12, 64, 42L).as("native"))
+      graft.plans.SignLshSignature.signature($"embedding", 12, 64, 42L).as("native"))
       .filter($"hof" =!= $"native")
     assert(diff.count() == 0)
   }
 
   test("native sign-lsh is callable from the SQL surface") {
-    graft.plans.SignLshSignature.register(spark)
     val got = spark.sql(
       "SELECT graft_sign_lsh(array(CAST(1.0 AS FLOAT), CAST(-2.0 AS FLOAT)), 4, 2, 42L)")
       .as[Int].head()
@@ -77,12 +75,12 @@ class NativeExprSpec extends SparkSpec {
         .toDF("doc_id", "text", "lang", "source", "n_chars"))
     val tokDiff = docs.select(
       graft.functions.TextFunctions.tokens($"text").as("hof"),
-      graft.plans.TextNative.tokens(spark, $"text").as("native"))
+      graft.plans.TextNative.tokens($"text").as("native"))
       .filter($"hof" =!= $"native")
     assert(tokDiff.count() == 0)
     val shDiff = docs.select(
       array_distinct(graft.functions.TextFunctions.shingles($"text", 3)).as("hof"),
-      graft.plans.TextNative.shingles(spark, $"text", 3).as("native"))
+      graft.plans.TextNative.shingles($"text", 3).as("native"))
       .filter(array_sort($"hof") =!= array_sort($"native"))  // set semantics
     assert(shDiff.count() == 0)
   }
@@ -95,7 +93,7 @@ class NativeExprSpec extends SparkSpec {
       (4L, "Straße")       // sharp s survives lowercase
     ).toDF("id", "text")
     val got = df.select($"id",
-      graft.plans.TextNative.normalizeText(spark, $"text").as("n"))
+      graft.plans.TextNative.normalizeText($"text").as("n"))
       .orderBy("id").as[(Long, String)].collect().toSeq
     assert(got == Seq(
       (1L, "café naïve mixed case"), // composed single codepoints
@@ -106,7 +104,7 @@ class NativeExprSpec extends SparkSpec {
     // same word now dedup together
     val pair = Seq((1L, "Café"), (2L, "Café")).toDF("doc_id", "text")
     val normed = pair.select($"doc_id",
-      graft.plans.TextNative.normalizeText(spark, $"text").as("text"))
+      graft.plans.TextNative.normalizeText($"text").as("text"))
     val stats = graft.operators.DedupSuite
       .exactDedupStats(normed, $"text", $"doc_id").collect()
     assert(stats.length == 1 && stats(0).getAs[Long]("n_copies") == 2L)
@@ -119,7 +117,7 @@ class NativeExprSpec extends SparkSpec {
         (-3L, "Üni çöde İstanbul MIXED case 42", "x", "y", 0L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"))
       .select($"doc_id", $"text",
-        graft.plans.TextNative.tokens(spark, $"text").as("toks"))
+        graft.plans.TextNative.tokens($"text").as("toks"))
     // chunk mode (step == n): ceil(len/5) chunks incl. partial tail
     val hofChunks = when(size($"toks") === 0, array().cast("array<string>"))
       .otherwise(transform(
@@ -127,7 +125,7 @@ class NativeExprSpec extends SparkSpec {
         i => array_join(slice($"toks", i * 5 + 1, lit(5)), " ")))
     val chunkDiff = docs.select(
       hofChunks.as("hof"),
-      graft.plans.TextNative.chunks(spark, $"text", 5, 5).as("native"))
+      graft.plans.TextNative.chunks($"text", 5, 5).as("native"))
       .filter($"hof" =!= $"native")
     assert(chunkDiff.count() == 0)
     // sliding mode (step 1): full windows only, duplicates kept
@@ -136,7 +134,7 @@ class NativeExprSpec extends SparkSpec {
         i => concat(element_at($"toks", i), lit(" "), element_at($"toks", i + 1))))
     val gramDiff = docs.select(
       hofGrams.as("hof"),
-      graft.plans.TextNative.chunks(spark, $"text", 2, 1).as("native"))
+      graft.plans.TextNative.chunks($"text", 2, 1).as("native"))
       .filter($"hof" =!= $"native")
     assert(gramDiff.count() == 0)
   }
@@ -147,7 +145,7 @@ class NativeExprSpec extends SparkSpec {
         (-3L, "Üni çöde İstanbul MIXED case 42", "x", "y", 0L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"))
     val tok = docs.select($"doc_id",
-      explode(graft.plans.TextNative.tokens(spark, $"text")).as("_t"))
+      explode(graft.plans.TextNative.tokens($"text")).as("_t"))
       .select($"doc_id", graft.functions.TextFunctions.md5Hash60($"_t").as("_h"))
     val bitSums = (0 until 60).map(b =>
       sum(when(shiftright($"_h", b).bitwiseAND(lit(1L)) === 1L, 1)
@@ -160,14 +158,14 @@ class NativeExprSpec extends SparkSpec {
       .join(agg.select($"doc_id", sim.as("expected")), Seq("doc_id"), "left")
       .na.fill(0L, Seq("expected"))
     val got = docs.select($"doc_id",
-      graft.plans.TextNative.simhash60(spark, $"text").as("got"))
+      graft.plans.TextNative.simhash60($"text").as("got"))
     assert(got.join(expected, "doc_id").filter($"got" =!= $"expected").count() == 0)
   }
 
   test("native minhash signature matches the explode/min-agg construction") {
     val docs = Tables.documents(spark, sf("sf0.01")).limit(200)
     val base = docs.select($"doc_id",
-      graft.plans.TextNative.shingles(spark, $"text", 3).as("_sh"))
+      graft.plans.TextNative.shingles($"text", 3).as("_sh"))
       .filter(size($"_sh") > 0)
     val k = 16
     val hashed = base.select($"doc_id", explode($"_sh").as("_s"))
@@ -181,7 +179,7 @@ class NativeExprSpec extends SparkSpec {
     val expected = hashed.groupBy($"doc_id").agg(
       min(mix(0)).as("_h0"), (1 until k).map(i => min(mix(i)).as(s"_h$i")): _*)
     val got = base.select($"doc_id",
-      graft.plans.TextNative.minhashSig(spark, $"_sh", k).as("_sig"))
+      graft.plans.TextNative.minhashSig($"_sh", k).as("_sig"))
     val joined = got.join(expected, "doc_id")
     val diff = (0 until k).map(i =>
       element_at($"_sig", i + 1) =!= col(s"_h$i")).reduce(_ || _)

@@ -40,7 +40,7 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("token budget sample: within budget per stratum, raised budget extends") {
-    val toks = size(graft.plans.TextNative.tokens(spark, $"text")).cast("long")
+    val toks = size(graft.plans.TextNative.tokens($"text")).cast("long")
     val base = docs.select($"doc_id", $"lang", toks.as("n_tokens"))
     def pick(b: Long) = Sampling.tokenBudgetSample(
       base, $"doc_id", $"lang", $"n_tokens", b)
