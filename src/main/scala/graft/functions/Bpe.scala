@@ -112,11 +112,6 @@ object Bpe {
     trainOnHistogram(hist, numMerges = 24)
   }
 
-  /** The DuckDB replay of [[encode]] for SQL-oracle construction: wraps
-    * a word expression's characters in parens and folds `merges` as
-    * nested `replace` calls — the exact cross-engine contract of
-    * [[graft.plans.BpeEncode]]. `wordExpr` must be a SQL expression
-    * yielding one lowercase [a-z0-9]+ word. */
   /** Oracle-replay-only bound: each merge nests one `replace(...)`, and
     * DuckDB's parser caps expression depth at max_expression_depth
     * (default 1000). The ENGINE has no such bound — [[encode]] carries
@@ -126,6 +121,11 @@ object Bpe {
     * downstream with a parser error pointing nowhere. */
   val MaxReplayMerges = 500
 
+  /** The DuckDB replay of [[encode]] for SQL-oracle construction: wraps
+    * a word expression's characters in parens and folds `merges` as
+    * nested `replace` calls — the exact cross-engine contract of
+    * [[graft.plans.BpeEncode]]. `wordExpr` must be a SQL expression
+    * yielding one lowercase [a-z0-9]+ word. */
   def replaySql(wordExpr: String, merges: Seq[(String, String)]): String = {
     require(merges.size <= MaxReplayMerges,
       s"Bpe.replaySql: ${merges.size} merges exceed the $MaxReplayMerges " +

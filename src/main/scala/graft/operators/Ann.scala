@@ -726,23 +726,6 @@ object Ann {
     * assignment stage n^1.25 under its n^1.5 pair stage. */
   val SemDedupCoarseProbes: Int = 8
 
-  /** SemDeDup-style semantic dedup: assign every embedding to its nearest
-    * centroid cell(s), compare vectors ONLY where their probed cells
-    * overlap (triangular equi-join on cell_id), and drop the higher id of
-    * every pair whose cosine clears `threshold`. Returns one row per
-    * vector: (vec_id, cell_id, kept) — cell_id is the primary (nearest)
-    * cell.
-    *
-    * The cell partition turns the corpus-quadratic comparison into a
-    * per-cell quadratic — with k centroids from [[trainCentroids]] the
-    * expected cost drops by ~k; at 100 TB you persist the cell assignment
-    * (partitionBy(cell_id)) once and the pair stage reads co-located
-    * cells with no further shuffle. Approximate by design: a pair is
-    * compared only if some probed cell is shared. `probeCells = 1` is
-    * classic SemDeDup (boundary pairs are missed — measured 778/1000
-    * planted pairs at 256 random cells, SCALE_SMOKE.md); `probeCells = 2`
-    * closes most boundary misses for ~2x pair-stage cost. Precision is
-    * exact at any setting. */
   /** Cell count for a corpus of `n` vectors — THE semantic-dedup scale
     * knob. A FIXED k is the classic SemDeDup scale bug: cell density
     * grows linearly with the corpus, so the within-cell pair stage grows
@@ -792,7 +775,25 @@ object Ann {
   val PairSaltRowsKey = "spark.graft.ann.pairSaltRows"
   val PairSaltRowsDefault: Long = 4096L
 
-  /** `corpusRows`: optional caller-known corpus row count (< 0 = unknown).
+  /** SemDeDup-style semantic dedup: assign every embedding to its nearest
+    * centroid cell(s), compare vectors ONLY where their probed cells
+    * overlap (triangular equi-join on cell_id), and drop the higher id of
+    * every pair whose cosine clears `threshold`. Returns one row per
+    * vector: (vec_id, cell_id, kept) — cell_id is the primary (nearest)
+    * cell.
+    *
+    * The cell partition turns the corpus-quadratic comparison into a
+    * per-cell quadratic — with k centroids from [[trainCentroids]] the
+    * expected cost drops by ~k; at 100 TB you persist the cell assignment
+    * (partitionBy(cell_id)) once and the pair stage reads co-located
+    * cells with no further shuffle. Approximate by design: a pair is
+    * compared only if some probed cell is shared. `probeCells = 1` is
+    * classic SemDeDup (boundary pairs are missed — measured 778/1000
+    * planted pairs at 256 random cells, SCALE_SMOKE.md); `probeCells = 2`
+    * closes most boundary misses for ~2x pair-stage cost. Precision is
+    * exact at any setting.
+    *
+    * `corpusRows`: optional caller-known corpus row count (< 0 = unknown).
     * Callers that already counted the corpus — every adaptive-k caller
     * does, [[adaptiveCellCount]] needs n — pass it so the pair stage can
     * prove salting is a no-op: no cell can exceed the corpus, so

@@ -153,8 +153,9 @@ object CorpusStats {
     * ONE model row per distinct bigram, so zipfian-hot bigrams skew the
     * probe side only (AQE skew-split territory, no hot reducer on the
     * build side); the per-doc aggregate is a second combine-friendly
-    * groupBy. Two shuffles total, both linear in corpus size. */
-  /** `minCount` is the 100 TB knob: bigrams below the floor drop from
+    * groupBy. Two shuffles total, both linear in corpus size.
+    *
+    * `minCount` is the 100 TB knob: bigrams below the floor drop from
     * the MODEL and score as unseen (numerator 1, the same add-half
     * smoothing) — a zipf corpus's model shrinks by orders of magnitude
     * at floor 2-5, small enough to broadcast at any corpus scale (the

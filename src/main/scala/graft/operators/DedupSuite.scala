@@ -28,31 +28,6 @@ object DedupSuite {
     docs.groupBy(md5(text).as("content_hash"))
       .agg(min(id).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
-    *
-    * Plan shape (deliberately flat, fully codegen'd — no nested
-    * higher-order lambdas, which Spark evaluates interpreted and
-    * per-element):
-    *
-    *  1. explode shingle sets to (id, shingle) rows — the tokenizer runs
-    *     once per document;
-    *  2. the k hash functions are k plain `xxhash64(shingle, seed)`
-    *     columns — one codegen'd projection;
-    *  3. signatures = groupBy(id).agg(min(h_0)..min(h_k-1)) — partial
-    *     (map-side) min aggregation, so the shuffle carries one k-long row
-    *     per (partition, doc), not per shingle;
-    *  4. band keys = xxhash64 over r consecutive signature columns —
-    *     again one projection; explode → shuffle on (band, bandhash) →
-    *     same-bucket self-join → distinct candidate pairs;
-    *  5. join candidates back to shingle sets → exact Jaccard filter.
-    *
-    * Collision probability in some band is 1-(1-j^r)^b for Jaccard j:
-    * with k=64, b=16, r=4 a j=0.8 pair is missed with p≈2e-4 and a
-    * j=0.95 pair with p≈1e-18; the exact verify step removes all false
-    * positives, so precision is 1 by construction.
-    *
-    * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
-    */
   /** Shingle sets per doc (shared by the signature and verify stages).
     * Native single-pass tokenizer+shingler (graft_shingles) — the HOF
     * composition re-tokenizes interpreted, and this column is evaluated
@@ -110,6 +85,31 @@ object DedupSuite {
       .filter(col("bucket_size") > bucketCap)
   }
 
+  /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
+    *
+    * Plan shape (deliberately flat, fully codegen'd — no nested
+    * higher-order lambdas, which Spark evaluates interpreted and
+    * per-element):
+    *
+    *  1. explode shingle sets to (id, shingle) rows — the tokenizer runs
+    *     once per document;
+    *  2. the k hash functions are k plain `xxhash64(shingle, seed)`
+    *     columns — one codegen'd projection;
+    *  3. signatures = groupBy(id).agg(min(h_0)..min(h_k-1)) — partial
+    *     (map-side) min aggregation, so the shuffle carries one k-long row
+    *     per (partition, doc), not per shingle;
+    *  4. band keys = xxhash64 over r consecutive signature columns —
+    *     again one projection; explode → shuffle on (band, bandhash) →
+    *     same-bucket self-join → distinct candidate pairs;
+    *  5. join candidates back to shingle sets → exact Jaccard filter.
+    *
+    * Collision probability in some band is 1-(1-j^r)^b for Jaccard j:
+    * with k=64, b=16, r=4 a j=0.8 pair is missed with p≈2e-4 and a
+    * j=0.95 pair with p≈1e-18; the exact verify step removes all false
+    * positives, so precision is 1 by construction.
+    *
+    * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
+    */
   def minhashNearDupPairs(docs: DataFrame, id: String, text: Column,
                           shingleSize: Int = 3, numHashes: Int = 64,
                           bands: Int = 16, threshold: Double = 0.8,

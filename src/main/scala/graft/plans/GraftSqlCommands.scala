@@ -122,13 +122,12 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   private val Clone   =
     s"""(?is)CLONE\\s+$P\\s+TO\\s+$P(?:\\s+VERSION\\s+AS\\s+OF\\s+(\\d+))?(?:\\s+(DEEP))?""".r
 
-  /** A table position → manifest root: strip quotes from a path literal,
-    * or resolve `catalog.ns….name` through a registered [[graft.sources.v2.GraftCatalog]].
-    * `mustExist = false` (CREATE) resolves the location without demanding
-    * the table already be there. */
-  /** A quoted 'path' verbatim, or a bare catalog.ns….table name through
-    * the shared resolver (one validation path with the formats' `table`
-    * option — they must never drift apart). */
+  /** A table position → manifest root: a quoted 'path' verbatim, or a
+    * bare `catalog.ns….name` through a registered
+    * [[graft.sources.v2.GraftCatalog]]'s shared resolver (one validation
+    * path with the formats' `table` option — they must never drift
+    * apart). `mustExist = false` (CREATE) resolves the location without
+    * demanding the table already be there. */
   private def res(p: String, mustExist: Boolean = true): String =
     if (p.startsWith("'")) p.stripPrefix("'").stripSuffix("'")
     else graft.sources.v2.GraftCatalog.resolveName(p, mustExist)

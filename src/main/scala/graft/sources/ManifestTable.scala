@@ -142,6 +142,11 @@ object ManifestTable {
       segs.slice(1, segs.length - 1).mkString("/")
     }
 
+    /** The hive partition columns the file's directories spell, in
+      * directory order (empty when unpartitioned) — its layout. */
+    def partitionKeys: Seq[String] =
+      partitionPath.split('/').toSeq.filter(_.nonEmpty).map(_.takeWhile(_ != '='))
+
     /** Hive `k=v` partition segments decoded to column → value; a
       * `__HIVE_DEFAULT_PARTITION__` value decodes to None (null). */
     def partitionValues: Map[String, Option[String]] =
@@ -287,22 +292,6 @@ object ManifestTable {
   /** Conf gate (default on) for the resolved-state memo below. */
   val StateMemoKey = "spark.graft.stateMemo.enabled"
 
-  /** Memo of fully-resolved states keyed (root, version), each entry
-    * validated by the HEAD manifest file's (length, modificationTime)
-    * fingerprint. Sound because committed manifests are IMMUTABLE — the
-    * CAS claim creates each `NNN.txt` exactly once and nothing ever
-    * rewrites it — so a (root, version) can only resolve one way while
-    * its manifest file exists unchanged; the fingerprint catches the
-    * one aliasing hazard (a table deleted and re-created at the same
-    * path re-claims version numbers with new content). Why it exists:
-    * ONE query's planning resolves the same state several times —
-    * table schema, bucket layout, the ScanBuilder, V1 statistics — and
-    * each cold resolution is a manifest parse plus, for sidecar-backed
-    * snapshots, a driver parquet read of the checkpoint; on a
-    * 10k-query/day warehouse that is real plan-time. A hit costs one
-    * getFileStatus (plus one exists() on the sidecar for
-    * columnar-snapshot entries). Bounded LRU (access-order),
-    * process-wide. */
   /** One memo entry: the head manifest's fingerprint, the SIDECAR path
     * the resolution read through (when the snapshot base was
     * columnar), and the state. The sidecar is re-checked for EXISTENCE
@@ -334,6 +323,22 @@ object ManifestTable {
         c.length + cs.min.length + cs.max.length +
           cs.ndv.map(_.length).getOrElse(0) + 24 }.sum).sum
   private var stateMemoWeight = 0L
+  /** Memo of fully-resolved states keyed (root, version), each entry
+    * validated by the HEAD manifest file's (length, modificationTime)
+    * fingerprint. Sound because committed manifests are IMMUTABLE — the
+    * CAS claim creates each `NNN.txt` exactly once and nothing ever
+    * rewrites it — so a (root, version) can only resolve one way while
+    * its manifest file exists unchanged; the fingerprint catches the
+    * one aliasing hazard (a table deleted and re-created at the same
+    * path re-claims version numbers with new content). Why it exists:
+    * ONE query's planning resolves the same state several times —
+    * table schema, bucket layout, the ScanBuilder, V1 statistics — and
+    * each cold resolution is a manifest parse plus, for sidecar-backed
+    * snapshots, a driver parquet read of the checkpoint; on a
+    * 10k-query/day warehouse that is real plan-time. A hit costs one
+    * getFileStatus (plus one exists() on the sidecar for
+    * columnar-snapshot entries). Bounded LRU (access-order),
+    * process-wide. */
   private val stateMemo =
     new java.util.LinkedHashMap[(String, Long), MemoEntry](64, 0.75f, true)
 
@@ -1163,15 +1168,6 @@ object ManifestTable {
       entries.map(_.rows).sum >= floor
   }
 
-  /** Inventory one generation dir's parquet files as root-relative
-    * entries, collecting per-column min/max from each file's parquet
-    * FOOTER (one metadata read per file, at write time — the Delta/
-    * Iceberg stats-at-commit pattern; readers then skip files from
-    * manifest metadata alone, [[readWhere]]). Tables opted into
-    * [[NdvColsProp]] additionally get per-file HLL distinct sketches
-    * for the named columns (one distributed read of the new files).
-    * Footer-read failures degrade to an entry without stats — stats
-    * are advisory, never load-bearing for correctness. */
   /** Recursive leaf-file listing that never loads permissions on a LOCAL
     * filesystem. `FileSystem.listFiles(dir, recursive = true)` has to
     * materialize [[org.apache.hadoop.fs.LocatedFileStatus]]es, whose
@@ -1202,6 +1198,15 @@ object ManifestTable {
     out.result()
   }
 
+  /** Inventory one generation dir's parquet files as root-relative
+    * entries, collecting per-column min/max from each file's parquet
+    * FOOTER (one metadata read per file, at write time — the Delta/
+    * Iceberg stats-at-commit pattern; readers then skip files from
+    * manifest metadata alone, [[readWhere]]). Tables opted into
+    * [[NdvColsProp]] additionally get per-file HLL distinct sketches
+    * for the named columns (one distributed read of the new files).
+    * Footer-read failures degrade to an entry without stats — stats
+    * are advisory, never load-bearing for correctness. */
   private def listGeneration(spark: SparkSession, root: String, gen: String,
                              tags: Map[String, String] = Map.empty)
       : Seq[FileEntry] = {
@@ -1505,14 +1510,6 @@ object ManifestTable {
     }: _*)
   }
 
-  /** Write `df` into a fresh immutable generation dir; returns the
-    * generation's file entries. Generations are written with
-    * TIMESTAMP(MICROS) parquet timestamps (session-scoped, restored
-    * after): the INT96 session default carries NO footer statistics, so
-    * timestamp columns would be invisible to [[readWhere]]'s data
-    * skipping — and INT96 also defeats parquet predicate pushdown on the
-    * scan itself. Scoped here rather than session-wide so the engine's
-    * other outputs keep the session's own timestamp posture. */
   /** Table property enabling OPTIMIZED WRITES (the Delta
     * `autoOptimize.optimizeWrite` role): every partitioned generation
     * write first REBALANCE-shuffles by the partition columns, so a
@@ -1526,17 +1523,61 @@ object ManifestTable {
     * batches. */
   private[graft] val OptimizedWriteProp = "write.optimized"
 
+  /** How [[writeGeneration]] lays a frame's rows into files. */
+  private sealed trait Shape
+  /** The frame as it comes; a partitioned write rebalances by its
+    * partition columns first under [[OptimizedWriteProp]]. */
+  private case object Plain extends Shape
+  /** ~`targetFileMB` files per partition value, sized from the input's
+    * on-disk bytes and salted against skew ([[Writers.sizedRewrite]]). */
+  private final case class Sized(targetFileMB: Int) extends Shape
+  /** ~`targetFileMB` files, each a disjoint range of (partition columns
+    * ++ `by`) sorted within — so min/max skipping on `by` bites. With
+    * `zOrder` and 2+ columns the range key is their interleaved Morton
+    * key ([[graft.plans.ZOrder]]), a sort expression that is never
+    * written; no single-reducer funnel at any size (the range
+    * partitioner samples away key skew). */
+  private final case class Ordered(targetFileMB: Int, by: Seq[String],
+                                   zOrder: Boolean) extends Shape
+
+  /** Write `df` (LOGICAL names) into a fresh immutable generation dir
+    * laid out by `shape` — the one place a data generation is written
+    * and listed; returns the dir and its file entries. `bytes` is the
+    * input's on-disk size, which sizes the [[Sized]] and [[Ordered]]
+    * shapes. Generations are written with TIMESTAMP(MICROS) parquet
+    * timestamps (a cloned session, [[withMicrosTimestamps]]): the INT96
+    * session default carries NO footer statistics, so timestamp columns
+    * would be invisible to [[readWhere]]'s data skipping — and INT96
+    * also defeats parquet predicate pushdown on the scan itself. Scoped
+    * here rather than session-wide so the engine's other outputs keep
+    * the session's own timestamp posture. */
   private def writeGeneration(df: DataFrame, root: String,
                               partitionCols: Seq[String],
-                              tags: Map[String, String] = Map.empty)
+                              tags: Map[String, String] = Map.empty,
+                              shape: Shape = Plain, bytes: Long = 0L)
       : (String, Seq[FileEntry]) = {
     val gen = s"gen-${java.util.UUID.randomUUID().toString.take(12)}"
     val genPath = new Path(root, gen)
-    val optimized = partitionCols.nonEmpty &&
+    val optimized = shape == Plain && partitionCols.nonEmpty &&
       tags.get(OptimizedWriteProp).exists(_.equalsIgnoreCase("true"))
-    val shaped =
-      if (optimized) df.hint("rebalance", partitionCols.map(col): _*)
-      else df
+    // shaped on LOGICAL names; the physical projection below keeps
+    // every task's row order
+    val shaped = shape match {
+      case Plain =>
+        if (optimized) df.hint("rebalance", partitionCols.map(col): _*) else df
+      case Sized(targetFileMB) =>
+        Writers.sizedRewrite(df, bytes, partitionCols, targetFileMB)
+      case Ordered(targetFileMB, by, zOrder) =>
+        val missing = by.filterNot(df.columns.contains)
+        require(missing.isEmpty,
+          s"sort column(s) ${missing.mkString(", ")} not in table schema")
+        val orderCols =
+          if (zOrder && by.size > 1)
+            partitionCols.map(col) :+ graft.plans.ZOrder.zkey(df, by)
+          else (partitionCols ++ by).map(col)
+        df.repartitionByRange(Writers.fileCount(bytes, targetFileMB), orderCols: _*)
+          .sortWithinPartitions(orderCols: _*)
+    }
     // logical → physical names: every generation of a table shares one
     // physical schema, however many renames sit between them
     val phys = physicalizeDf(shaped, tags)
@@ -2485,8 +2526,7 @@ object ManifestTable {
                             files: Seq[FileEntry]): Seq[String] =
     if (st.tags.contains(EvolvedTag)) layoutOf(root, st)
     else {
-      val layouts = files.map(_.partitionPath.split('/').toSeq
-        .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
+      val layouts = files.map(_.partitionKeys).distinct
       require(layouts.size <= 1,
         s"rewrite: inconsistent partition layouts in $root: $layouts")
       layouts.headOption.getOrElse(Seq.empty)
@@ -3039,19 +3079,7 @@ object ManifestTable {
                         withPositions: Boolean,
                         tags: Map[String, String]): DataFrame = {
     val sources = cloneSources(tags)
-    // partition columns are pinned to STRING (no type inference): the
-    // carry-forward filter and compaction both assume a partition value
-    // re-spells identically when rewritten ("same writer produced both
-    // sides"). Inference breaks that — a k=01 dir reads back as int 1 and
-    // rewrites as k=1, silently duplicating the partition next to its
-    // carried files. String pinning makes the round-trip exact. Schema
-    // resolution is EAGER (the conf is read while each per-generation
-    // frame is constructed here), and the set/restore is serialized by a
-    // process-wide lock: two concurrent manifest reads (e.g. racing
-    // upsert writers) would otherwise restore the conf out from under
-    // each other mid-plan. Non-manifest reads on OTHER threads can still
-    // observe the toggled conf for the lock's duration — driver-side
-    // planning only, milliseconds.
+    // partition columns read back as STRING (genFrame says why)
     files.groupBy(_.relPath.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (gen, fs) =>
         // a shallow clone's inherited generations live under a
@@ -3088,7 +3116,25 @@ object ManifestTable {
 
   private val inferenceLock = new Object
 
-  /** Per-(session, generation-dir) memo of the scan schema, shared with
+  /** A flat immutable dataset dir (dv-/cdf-/bloomidx-; no hive
+    * subdirs, written once under a UUID name) read with its schema
+    * memoized — same contract as [[genFrame]] minus basePath/partition
+    * concerns. */
+  private def dirFrame(spark: SparkSession, dir: String): DataFrame = {
+    val cached = graft.core.SchemaMemo.get(spark, dir)
+    if (cached != null) spark.read.schema(cached).parquet(dir)
+    else {
+      val df = spark.read.parquet(dir)
+      graft.core.SchemaMemo.put(spark, dir, df.schema)
+      df
+    }
+  }
+
+  /** One generation's DataFrame: memoized schema when available (no
+    * inference job), else an inference-off construction that seeds the
+    * memo. `paths` may be any non-empty subset of the generation's files.
+    *
+    * The memo is keyed per (session, generation dir) and shared with
     * [[graft.core.Tables]] via [[graft.core.SchemaMemo]] (one bound, one
     * keying rule). A generation is IMMUTABLE once committed (written
     * `ErrorIfExists` under a fresh UUID dir, never appended to), and
@@ -3106,23 +3152,6 @@ object ManifestTable {
     * too). Subset reads (file pruning) are safe: any non-empty subset of
     * a generation yields the same schema — one write, one schema, one
     * directory layout. */
-  /** A flat immutable dataset dir (dv-/cdf-/bloomidx-; no hive
-    * subdirs, written once under a UUID name) read with its schema
-    * memoized — same contract as [[genFrame]] minus basePath/partition
-    * concerns. */
-  private def dirFrame(spark: SparkSession, dir: String): DataFrame = {
-    val cached = graft.core.SchemaMemo.get(spark, dir)
-    if (cached != null) spark.read.schema(cached).parquet(dir)
-    else {
-      val df = spark.read.parquet(dir)
-      graft.core.SchemaMemo.put(spark, dir, df.schema)
-      df
-    }
-  }
-
-  /** One generation's DataFrame: memoized schema when available (no
-    * inference job), else an inference-off construction that seeds the
-    * memo. `paths` may be any non-empty subset of the generation's files. */
   private def genFrame(spark: SparkSession, base: String, gen: String,
                        paths: Seq[String]): DataFrame = {
     val genDir = new Path(base, gen).toString
@@ -3158,23 +3187,6 @@ object ManifestTable {
     }
   }
 
-  /** Blind full-table (over)write — the manifest analogue of
-    * `SaveMode.Overwrite`. No read dependency, so a lost claim just
-    * re-claims the next version (bounded retries) without rewriting.
-    * Always commits a FULL snapshot (the file list IS the batch) and
-    * advances the `_last_checkpoint` pointer.
-    *
-    * Fail-safe tradeoff: the v1 re-seed guard means a PERMANENTLY
-    * unresolvable table (lost sidecar, broken delta chain with every
-    * snapshot garbled) makes even this no-read-dependency overwrite burn
-    * `maxAttempts` and fail — the guard cannot distinguish that state
-    * from a transient sidecar outage, and silently seeding v1 below the
-    * vacuum floor would shadow every newer commit via the pointer fast
-    * path. That is deliberate: losing an overwrite attempt is recoverable,
-    * losing a committed table to a mis-diagnosed transient is not. An
-    * operator who has POSITIVELY determined the log is beyond repair can
-    * pass `reseedUnresolvable = true` to accept the head-shadowing risk
-    * and re-seed above the newest claimed slot. */
   /** Seed a table at v1 with a SCHEMA and no data — SQL
     * `CREATE TABLE` (no AS). The schema rides the manifest tags
     * ([[SchemaTag]]) because a zero-file table has no parquet footer to
@@ -3344,6 +3356,23 @@ object ManifestTable {
     1L
   }
 
+  /** Blind full-table (over)write — the manifest analogue of
+    * `SaveMode.Overwrite`. No read dependency, so a lost claim just
+    * re-claims the next version (bounded retries) without rewriting.
+    * Always commits a FULL snapshot (the file list IS the batch) and
+    * advances the `_last_checkpoint` pointer.
+    *
+    * Fail-safe tradeoff: the v1 re-seed guard means a PERMANENTLY
+    * unresolvable table (lost sidecar, broken delta chain with every
+    * snapshot garbled) makes even this no-read-dependency overwrite burn
+    * `maxAttempts` and fail — the guard cannot distinguish that state
+    * from a transient sidecar outage, and silently seeding v1 below the
+    * vacuum floor would shadow every newer commit via the pointer fast
+    * path. That is deliberate: losing an overwrite attempt is recoverable,
+    * losing a committed table to a mis-diagnosed transient is not. An
+    * operator who has POSITIVELY determined the log is beyond repair can
+    * pass `reseedUnresolvable = true` to accept the head-shadowing risk
+    * and re-seed above the newest claimed slot. */
   def write(df: DataFrame, root: String, partitionCols: Seq[String] = Nil,
             maxAttempts: Int = 50,
             reseedUnresolvable: Boolean = false): Long = {
@@ -3528,8 +3557,7 @@ object ManifestTable {
     if (st.tags.contains(EvolvedTag))
       return st.tags.get(LayoutTag).map(_.split(',').toSeq.filter(_.nonEmpty))
         .getOrElse(Seq.empty)
-    val layouts = st.files.map(_.partitionPath.split('/').toSeq
-      .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
+    val layouts = st.files.map(_.partitionKeys).distinct
     require(layouts.size <= 1,
       s"partitionLayout: inconsistent partition layouts in $root: $layouts")
     layouts.headOption.getOrElse(
@@ -3537,20 +3565,6 @@ object ManifestTable {
         .getOrElse(Seq.empty))
   }
 
-  /** Add-only commit — SQL `INSERT INTO` semantics: the batch lands as a
-    * fresh generation, every live file carries forward BY REFERENCE and
-    * nothing is read back, so the work is O(batch) at any table size
-    * (the 100 TB ingest shape: appending 2 GB writes 2 GB of parquet
-    * plus a delta manifest, never touching the other files). The batch
-    * must spell the table's exact LOGICAL columns — a blind append must
-    * not fork the schema; additive evolution is [[upsertDedup]]'s
-    * `mergeSchema`, a type change is a rewrite. CHECK constraints gate
-    * the batch; the change feed (when enabled) records every appended
-    * row as an "insert", derived from the WRITTEN generation so a
-    * non-deterministic source cannot desync feed from bytes. Commits a
-    * DELTA manifest (op "append", adds only) with the same CAS
-    * discipline as every mutator; every `checkpointInterval`-th version
-    * snapshots so resolution chains stay short. */
   /** A batch aligned to the table's LOGICAL schema exactly as
     * [[append]] accepts one: generated layout columns derive when the
     * batch omits them, names align case-insensitively into declared
@@ -3584,6 +3598,20 @@ object ManifestTable {
     aligned
   }
 
+  /** Add-only commit — SQL `INSERT INTO` semantics: the batch lands as a
+    * fresh generation, every live file carries forward BY REFERENCE and
+    * nothing is read back, so the work is O(batch) at any table size
+    * (the 100 TB ingest shape: appending 2 GB writes 2 GB of parquet
+    * plus a delta manifest, never touching the other files). The batch
+    * must spell the table's exact LOGICAL columns — a blind append must
+    * not fork the schema; additive evolution is [[upsertDedup]]'s
+    * `mergeSchema`, a type change is a rewrite. CHECK constraints gate
+    * the batch; the change feed (when enabled) records every appended
+    * row as an "insert", derived from the WRITTEN generation so a
+    * non-deterministic source cannot desync feed from bytes. Commits a
+    * DELTA manifest (op "append", adds only) with the same CAS
+    * discipline as every mutator; every `checkpointInterval`-th version
+    * snapshots so resolution chains stay short. */
   def append(spark: SparkSession, batch: DataFrame, root: String,
              checkpointInterval: Int = DefaultCheckpointInterval,
              tags: Map[String, String] = Map.empty,
@@ -3652,14 +3680,14 @@ object ManifestTable {
 
   /** Table property enabling AUTO-COMPACT (the Delta
     * `autoOptimize.autoCompact` role): after an append commits, the
-    * partitions it touched are checked for small-file buildup and a
-    * scoped [[optimize]] runs when any reaches
-    * [[AutoCompactMinFiles]] — the backstop behind optimized writes
-    * for streaming sinks and drip appends, so a table never needs a
-    * human to notice it splintering. Best-effort by contract: the
-    * append has already committed, so a lost compaction race (or any
-    * failure) only logs — data is never at risk, the next append
-    * retries the check. */
+    * partitions it touched are checked for small-file buildup, and
+    * [[optimize]]'s bin-packing runs on exactly the partitions holding
+    * [[AutoCompactMinFiles]] or more packable files — the backstop
+    * behind optimized writes for streaming sinks and drip appends, so a
+    * table never needs a human to notice it splintering. Best-effort by
+    * contract: the append has already committed, so a lost compaction
+    * race (or any failure) only logs — data is never at risk, the next
+    * append retries the check. */
   private[graft] val AutoCompactProp = "write.autoCompact"
   private[graft] val AutoCompactMinFiles = 8
 
@@ -3669,29 +3697,17 @@ object ManifestTable {
     if (!tags.get(AutoCompactProp).exists(_.equalsIgnoreCase("true"))) return
     try {
       val st = current(spark, root).getOrElse(return)
-      val touched = entries.map(_.partitionPath).distinct.toSet
-      val targetBytes = 128L * 1024 * 1024
-      val crowded = st.files
-        .filter(f => touched.contains(f.partitionPath))
-        .filter(f => f.bytes < targetBytes / 2 || f.dv.nonEmpty)
+      val touched = entries.map(_.partitionPath).toSet
+      val targetMB = 128
+      val targetBytes = targetMB * 1024L * 1024L
+      val crowded = packable(st.files.filter(f => touched(f.partitionPath)), targetBytes)
         .groupBy(_.partitionPath).filter(_._2.size >= AutoCompactMinFiles)
-        .keySet
       if (crowded.isEmpty) return
-      val partKeys = layoutOf(root, st)
-      val predicate =
-        if (partKeys.isEmpty) None
-        else {
-          // per-key isin conjunction: a conservative SUPERSET of the
-          // crowded partitions for multi-key layouts — packing a few
-          // extra partitions early is harmless
-          val byKey = crowded.toSeq.map(p => p.split('/').toSeq.filter(_.nonEmpty)
-            .map { seg => seg.takeWhile(_ != '=') ->
-              unescapePathName(seg.dropWhile(_ != '=').drop(1)) }.toMap)
-          Some(partKeys.map(k =>
-            col(k).isin(byKey.flatMap(_.get(k)).distinct: _*)).reduce(_ && _))
-        }
       log.info(s"autoCompact($root): packing ${crowded.size} crowded partition(s)")
-      optimize(spark, root, predicate, targetFileMB = 128)
+      // exactly the crowded partitions' packable files, optimize's way
+      val scope = crowded.values.flatten.toSeq
+      rewrite(spark, root, st, "autoCompact", scope, rewriteLayout(root, st, scope),
+        Sized(targetMB), snapshot = false)
       ()
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -3700,17 +3716,6 @@ object ManifestTable {
     }
   }
 
-  /** Append-with-dedup upsert (K4 semantics) with carry-forward: only the
-    * partitions touched by `fresh` are read, merged keep-last
-    * ([[Upsert.appendDedup]]) and rewritten into a new generation; every
-    * live file of an UNtouched partition is carried into the new manifest
-    * by reference. Compare-and-swap on the version that was read.
-    *
-    * Partitioned upserts commit a DELTA manifest (adds + removes only —
-    * O(batch) bytes at any table size); every `checkpointInterval`-th
-    * version commits a FULL snapshot instead and advances the
-    * `_last_checkpoint` pointer. `checkpointInterval <= 1` forces a
-    * snapshot every commit (the pre-checkpoint behavior). */
   /** Dynamic-partition overwrite — SQL `INSERT OVERWRITE` under Spark's
     * dynamic mode, and Delta's partition-scoped `replaceWhere` shape:
     * every hive partition PRESENT in the batch is replaced wholesale,
@@ -3735,8 +3740,7 @@ object ManifestTable {
     // overwrite would silently keep them next to the replacement.
     // Refuse until a compact()/OPTIMIZE physicalizes the current spec.
     if (st.tags.contains(EvolvedTag)) {
-      val mixed = st.files.exists(f => f.partitionPath.split('/').toSeq
-        .filter(_.nonEmpty).map(_.takeWhile(_ != '=')) != partKeys)
+      val mixed = st.files.exists(_.partitionKeys != partKeys)
       require(!mixed,
         s"manifest table $root: dynamic partition overwrite with MIXED " +
           "partition-spec eras would silently retain old-era rows of " +
@@ -3809,6 +3813,17 @@ object ManifestTable {
     commit(fs, root, staged(root, manifest, Seq(gen), sidecar))
   }
 
+  /** Append-with-dedup upsert (K4 semantics) with carry-forward: only the
+    * partitions touched by `fresh` are read, merged keep-last
+    * ([[Upsert.appendDedup]]) and rewritten into a new generation; every
+    * live file of an UNtouched partition is carried into the new manifest
+    * by reference. Compare-and-swap on the version that was read.
+    *
+    * Partitioned upserts commit a DELTA manifest (adds + removes only —
+    * O(batch) bytes at any table size); every `checkpointInterval`-th
+    * version commits a FULL snapshot instead and advances the
+    * `_last_checkpoint` pointer. `checkpointInterval <= 1` forces a
+    * snapshot every commit (the pre-checkpoint behavior). */
   def upsertDedup(spark: SparkSession, fresh: DataFrame, root: String,
                   keys: Seq[String], order: String,
                   partitionCols: Seq[String] = Nil,
@@ -3881,8 +3896,7 @@ object ManifestTable {
         // itself survives, silently duplicating every touched old-era
         // row. Refuse until a compact()/OPTIMIZE physicalizes the spec.
         if (partitionCols.nonEmpty && st.tags.contains(EvolvedTag)) {
-          val mixed = st.files.exists(f => f.partitionPath.split('/').toSeq
-            .filter(_.nonEmpty).map(_.takeWhile(_ != '=')) != partitionCols.toSeq)
+          val mixed = st.files.exists(_.partitionKeys != partitionCols.toSeq)
           require(!mixed,
             s"manifest table $root: partitioned upsert across MIXED " +
               "partition-spec eras would duplicate old-era rows of touched " +
@@ -4096,21 +4110,12 @@ object ManifestTable {
     * advances the `_last_checkpoint` pointer. */
   def compact(spark: SparkSession, root: String, targetFileMB: Int = 512): Long = {
     require(targetFileMB > 0, s"compact: targetFileMB must be > 0, got $targetFileMB")
-    val fs = fsOf(spark, root)
     val st = head(spark, root)
-    val df = readState(spark, root, st)
-    val bytes = st.files.map(_.bytes).sum
     // partition keys: the files' single recorded layout — or, post
     // spec-evolution, the CURRENT spec of record (a full compact is
     // exactly how mixed eras physicalize onto one layout)
-    val keys = rewriteLayout(root, st, st.files)
-    val gen = s"gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    val genPath = new Path(root, gen)
-    // readState is the LOGICAL view; rewrites must land physical names
-    val micros = withMicrosTimestamps(physicalizeDf(df, st.tags))
-    Writers.sizedRewrite(micros.sparkSession, micros, bytes, keys, targetFileMB, genPath.toString)
-    val entries = listGeneration(spark, root, gen, st.tags)
-    commitRewrite(spark, fs, root, st, gen, entries)
+    rewrite(spark, root, st, "compact", st.files, rewriteLayout(root, st, st.files),
+      Sized(targetFileMB), snapshot = true)
   }
 
   /** Copy-on-write DELETE (the Delta/Iceberg `DELETE WHERE` role): drop
@@ -4214,6 +4219,12 @@ object ManifestTable {
     commit(fs, root, staged(root, manifest, keptGen.toSeq ++ batchGen))
   }
 
+  /** The table's live tag map (SHOW TBLPROPERTIES raw material): user
+    * properties and the engine's durable switches alike — callers
+    * filter what they surface. */
+  def tableProperties(spark: SparkSession, root: String): Map[String, String] =
+    current(spark, root).map(_.tags).getOrElse(Map.empty)
+
   /** SQL `ALTER TABLE … SET/UNSET TBLPROPERTIES`: user properties ride
     * the manifest tag map (one metadata commit), the same channel the
     * engine's own durable switches use — `cdf.enabled` set here IS
@@ -4222,12 +4233,6 @@ object ManifestTable {
     * (schema record, name mapping, constraints, bloom registry, stream
     * watermarks) refuses loudly in both directions: a property surface
     * must not be a backdoor that corrupts the table. */
-  /** The table's live tag map (SHOW TBLPROPERTIES raw material): user
-    * properties and the engine's durable switches alike — callers
-    * filter what they surface. */
-  def tableProperties(spark: SparkSession, root: String): Map[String, String] =
-    current(spark, root).map(_.tags).getOrElse(Map.empty)
-
   def setTableProperties(spark: SparkSession, root: String,
                          set: Map[String, String],
                          unset: Seq[String] = Nil): Long = {
@@ -4359,8 +4364,7 @@ object ManifestTable {
     val touched = DataSkipping.prune(st.files,
       physicalizeCol(predicate, st.tags), partitionTypes(st.tags))
     if (touched.isEmpty) return st.version
-    val layouts = touched.map(_.partitionPath.split('/').toSeq
-      .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
+    val layouts = touched.map(_.partitionKeys).distinct
     require(layouts.size <= 1,
       s"updateMoR: inconsistent partition layouts in $root: $layouts")
     val partKeys = layouts.headOption.getOrElse(Seq.empty)
@@ -4486,28 +4490,14 @@ object ManifestTable {
     * incremental readers emit nothing; [[statsOnly]] exactness returns
     * once no live file carries a DV. No-op without DVs. */
   def materializeDeletes(spark: SparkSession, root: String): Long = {
-    val fs = fsOf(spark, root)
     val st = head(spark, root)
     val dvd = st.files.filter(_.dv.nonEmpty)
     if (dvd.isEmpty) return st.version
-    val layouts = dvd.map(_.partitionPath.split('/').toSeq
-      .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
+    val layouts = dvd.map(_.partitionKeys).distinct
     require(layouts.size <= 1,
       s"materializeDeletes: inconsistent partition layouts in $root: $layouts")
-    val partKeys = layouts.headOption.getOrElse(Seq.empty)
-    val kept = readState(spark, root, st.copy(files = dvd))
-    val (entries, gen) =
-      if (kept.isEmpty) (Seq.empty[FileEntry], None) // every row was deleted
-      else {
-        val (g, es) = writeGeneration(kept, root, partKeys, st.tags)
-        (es, Some(g))
-      }
-    require(entries.nonEmpty || dvd.size < st.files.size,
-      s"materializeDeletes would leave $root file-less — a full-table clear " +
-        "is a rewrite: use write() with the replacement content")
-    val v = st.version + 1
-    commit(fs, root, staged(root, DeltaManifest(v, entries, dvd.map(_.relPath),
-      st.tags + (OpTag -> "rewrite")), gen.toSeq))
+    rewrite(spark, root, st, "materializeDeletes", dvd, layouts.headOption.getOrElse(Nil),
+      Plain, snapshot = false)
   }
 
   /** Copy-on-write UPDATE: for rows matching `predicate`, replace each
@@ -4670,29 +4660,6 @@ object ManifestTable {
   final case class SourceMissUpdate(set: Map[String, org.apache.spark.sql.Column])
     extends WhenNotMatchedBySource
 
-  /** MERGE INTO (the Delta `MERGE` role), copy-on-write: join `source`
-    * against the target on equality of `keys` (standard SQL `ON t.k =
-    * s.k` — NULL keys never match, so null-keyed source rows only ever
-    * insert), apply `whenMatched` to matched target rows, and (when
-    * `insertUnmatched`) append source rows matching no target key. File economics mirror [[delete]]:
-    * only target files that might contain a source key — pruned by the
-    * collected (bounded) source key set against manifest stats, like
-    * [[readWhereJoin]] — are rewritten; when the source key set exceeds
-    * `maxKeys` every file is considered touched (a bulk merge IS a
-    * table-sized operation). Pruning conservatism makes the unmatched
-    * set exact: untouched files provably contain no source key, so
-    * inserts anti-join only the touched slice.
-    *
-    * `source` must be UNIQUE on `keys` (checked — one aggregate over
-    * the source): duplicate source matches per target row are the
-    * classic silent-fanout bug and an error in every MERGE dialect.
-    * Commits a DELTA (op "merge"). Returns the new version, or the
-    * current one when the merge provably changes nothing.
-    *
-    * Incremental-consumer caveat: like [[delete]], a `MatchDelete` merge
-    * removes rows the file-level change feed cannot announce — keyed
-    * consumers that must propagate such removals should treat op="merge"
-    * windows from delete-merges as re-bootstrap boundaries. */
   /** Everything [[merge]] and [[mergeMoR]] validate and resolve before
     * their (different) execution plans — ONE implementation so the two
     * cannot drift: key existence, source-duplicate refusal, bounded
@@ -4745,6 +4712,29 @@ object ManifestTable {
     MergePrep(fs, st, target, touched, partKeys, srcN, collected.length > maxKeys)
   }
 
+  /** MERGE INTO (the Delta `MERGE` role), copy-on-write: join `source`
+    * against the target on equality of `keys` (standard SQL `ON t.k =
+    * s.k` — NULL keys never match, so null-keyed source rows only ever
+    * insert), apply `whenMatched` to matched target rows, and (when
+    * `insertUnmatched`) append source rows matching no target key. File economics mirror [[delete]]:
+    * only target files that might contain a source key — pruned by the
+    * collected (bounded) source key set against manifest stats, like
+    * [[readWhereJoin]] — are rewritten; when the source key set exceeds
+    * `maxKeys` every file is considered touched (a bulk merge IS a
+    * table-sized operation). Pruning conservatism makes the unmatched
+    * set exact: untouched files provably contain no source key, so
+    * inserts anti-join only the touched slice.
+    *
+    * `source` must be UNIQUE on `keys` (checked — one aggregate over
+    * the source): duplicate source matches per target row are the
+    * classic silent-fanout bug and an error in every MERGE dialect.
+    * Commits a DELTA (op "merge"). Returns the new version, or the
+    * current one when the merge provably changes nothing.
+    *
+    * Incremental-consumer caveat: like [[delete]], a `MatchDelete` merge
+    * removes rows the file-level change feed cannot announce — keyed
+    * consumers that must propagate such removals should treat op="merge"
+    * windows from delete-merges as re-bootstrap boundaries. */
   def merge(spark: SparkSession, root: String, source: DataFrame,
             keys: Seq[String], whenMatched: WhenMatched = MatchUpdateAll,
             insertUnmatched: Boolean = true, maxKeys: Int = 100000,
@@ -5024,8 +5014,7 @@ object ManifestTable {
     val touched = DataSkipping.prune(st.files,
       physicalizeCol(predicate, st.tags), partitionTypes(st.tags))
     if (touched.isEmpty) return st.version // provably nothing to do
-    val layouts = touched.map(_.partitionPath.split('/').toSeq
-      .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
+    val layouts = touched.map(_.partitionKeys).distinct
     require(layouts.size <= 1,
       s"$opName: inconsistent partition layouts in $root: $layouts")
     val partKeys = layouts.headOption.getOrElse(Seq.empty)
@@ -5074,22 +5063,11 @@ object ManifestTable {
                         minFiles: Int = 2): Long = {
     require(smallFileMB > 0 && targetFileMB >= smallFileMB,
       s"need 0 < smallFileMB <= targetFileMB, got $smallFileMB/$targetFileMB")
-    val fs = fsOf(spark, root)
     val st = head(spark, root)
-    val smallBytes = smallFileMB * 1024L * 1024L
-    val (small, big) = st.files.partition(_.bytes < smallBytes)
+    val small = st.files.filter(_.bytes < smallFileMB * 1024L * 1024L)
     if (small.sizeIs < minFiles) return st.version
-    val keys = rewriteLayout(root, st, small)
-    val df = readState(spark, root, st.copy(files = small))
-    val gen = s"gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    val micros = withMicrosTimestamps(physicalizeDf(df, st.tags))
-    Writers.sizedRewrite(micros.sparkSession, micros, small.map(_.bytes).sum,
-      keys, targetFileMB, new Path(root, gen).toString)
-    val entries = listGeneration(spark, root, gen, st.tags)
-    val v = st.version + 1
-    val (manifest, sidecar) = mkSnapshot(spark, root, v, big ++ entries,
-      st.tags + (OpTag -> "rewrite"))
-    commit(fs, root, staged(root, manifest, Seq(gen), sidecar))
+    rewrite(spark, root, st, "compactSmallFiles", small, rewriteLayout(root, st, small),
+      Sized(targetFileMB), snapshot = true)
   }
 
   /** One-row table summary (the DESCRIBE DETAIL role): current version,
@@ -5098,8 +5076,7 @@ object ManifestTable {
     * manifest metadata only, no data files touched. */
   def detail(spark: SparkSession, root: String): DataFrame = {
     val st = head(spark, root)
-    val layouts = st.files.map(_.partitionPath.split('/').toSeq
-      .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
+    val layouts = st.files.map(_.partitionKeys).distinct
     val partCols =
       if (st.tags.contains(EvolvedTag)) layoutOf(root, st)
       else layouts.headOption.getOrElse(
@@ -5140,11 +5117,6 @@ object ManifestTable {
       scala.jdk.CollectionConverters.SeqHasAsJava(Seq(row)).asJava), schema)
   }
 
-  /** The commit log as a DataFrame (the DESCRIBE HISTORY role): one row
-    * per RETAINED version, newest first — version, operation marker,
-    * manifest kind, files added/removed by that commit, and the commit
-    * file's modification time (best-effort wall clock; the protocol
-    * never depends on it). Driver-side metadata read only. */
   /** Newest committed version whose manifest's modification time is at
     * or before `epochMs` — the `TIMESTAMP AS OF` resolution rule
     * (Delta's): "the table as it was at 14:00" is the last commit
@@ -5190,6 +5162,11 @@ object ManifestTable {
     readVersion(spark, root, versionAtTime(spark, root, epochMs).getOrElse(
       sys.error(s"manifest table $root has no commit at or before epoch-ms $epochMs")))
 
+  /** The commit log as a DataFrame (the DESCRIBE HISTORY role): one row
+    * per RETAINED version, newest first — version, operation marker,
+    * manifest kind, files added/removed by that commit, and the commit
+    * file's modification time (best-effort wall clock; the protocol
+    * never depends on it). Driver-side metadata read only. */
   def history(spark: SparkSession, root: String): DataFrame = {
     val fs = fsOf(spark, root)
     val dir = new Path(root, ManifestDir)
@@ -5279,21 +5256,6 @@ object ManifestTable {
     commit(fs, root, staged(root, manifest, Nil, sidecar))
   }
 
-  /** Clustered compaction (the Delta OPTIMIZE ZORDER / Iceberg
-    * sort-order role, linear form): rewrite the live file set
-    * RANGE-PARTITIONED and sorted on `sortCols`, so each output file
-    * covers a DISJOINT slice of the sort key space — after which
-    * [[readWhere]]'s min/max skipping on those columns touches only the
-    * files whose slice intersects the predicate. This is what makes
-    * data skipping effective on UNPARTITIONED tables (and, within each
-    * hive partition, on secondary columns): freshly upserted generations
-    * have overlapping ranges per file; clustering collapses the overlap.
-    *
-    * Same CAS commit discipline as [[compact]]: full snapshot, pointer
-    * advance, tags preserved, orphan generation deleted on a lost race.
-    * Sort is per-output-file (`sortWithinPartitions`), not global — no
-    * single-reducer funnel at any table size; skew in the sort key is
-    * absorbed by the range partitioner's sampling. */
   /** Incremental OPTIMIZE (the Delta `OPTIMIZE [WHERE]` role): bin-pack
     * the SMALL files — and fold live deletion vectors — into
     * ~`targetFileMB` files, leaving already-compacted files untouched
@@ -5318,7 +5280,6 @@ object ManifestTable {
                targetFileMB: Int = 512,
                zOrderBy: Seq[String] = Nil): Long = {
     require(targetFileMB > 0, s"optimize: targetFileMB must be > 0, got $targetFileMB")
-    val fs = fsOf(spark, root)
     val st = head(spark, root)
     val scoped = predicate match {
       case None => st.files
@@ -5335,132 +5296,110 @@ object ManifestTable {
             "scoping must select exact partitions, use compact() for a full rewrite")
         DataSkipping.prune(st.files, phys, partitionTypes(st.tags))
     }
-    val targetBytes = targetFileMB * 1024L * 1024L
     // ZORDER BY changes the contract from bin-packing to CLUSTERING the
     // scope (Delta's OPTIMIZE ... ZORDER BY): clustering only the small
     // files would interleave sorted and unsorted data, so EVERY scoped
     // file rewrites — which is exactly why the partition scope exists
     // (cluster yesterday's partition nightly, never the 100 TB table)
     val eligible =
-      if (zOrderBy.nonEmpty) scoped
-      else scoped
-        .filter(f => f.bytes < targetBytes / 2 || f.dv.nonEmpty)
-        .groupBy(_.partitionPath).valuesIterator
-        .filter(fs0 => fs0.size >= 2 || fs0.exists(_.dv.nonEmpty))
-        .flatten.toSeq
+      if (zOrderBy.nonEmpty) scoped else packable(scoped, targetFileMB * 1024L * 1024L)
     if (eligible.isEmpty) return st.version // nothing worth packing
     // post spec-evolution the rewrite lands the CURRENT spec — an
     // incremental OPTIMIZE physicalizes exactly the partitions it packs
-    val partKeys = rewriteLayout(root, st, eligible)
-    // the eligible slice through the full read path: DVs fold in,
-    // rename/drop mappings and declared-NULL padding apply — the new
-    // files carry the same physical schema any generation write does
-    val df = readState(spark, root, st.copy(files = eligible))
-    val liveBytes = eligible.map(_.bytes).sum
-    val gen = s"gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    val genPath = new Path(root, gen)
-    if (zOrderBy.nonEmpty) {
-      require(zOrderBy.forall(df.columns.contains),
-        s"optimize: ZORDER BY ${zOrderBy.filterNot(df.columns.contains)} " +
-          "not in table schema")
-      // same clustering shape as the full-table cluster(): range
-      // partition on (partition cols ++ Morton key) so partition dirs
-      // stay contiguous per task, then sort within
-      val parts = math.max(1L, (liveBytes + targetBytes - 1) / targetBytes).toInt
-      val orderCols: Seq[org.apache.spark.sql.Column] =
-        if (zOrderBy.size > 1)
-          partKeys.map(col) :+ graft.plans.ZOrder.zkey(df, zOrderBy)
-        else (partKeys ++ zOrderBy).map(col)
-      val clustered = withMicrosTimestamps(physicalizeDf(
-        df.repartitionByRange(parts, orderCols: _*)
-          .sortWithinPartitions(orderCols: _*), st.tags))
-      val w = clustered.write.mode(SaveMode.ErrorIfExists)
-      (if (partKeys.nonEmpty) w.partitionBy(partKeys: _*) else w)
-        .parquet(genPath.toString)
-    } else {
-      val micros = withMicrosTimestamps(physicalizeDf(df, st.tags))
-      Writers.sizedRewrite(micros.sparkSession, micros, liveBytes, partKeys,
-        targetFileMB, genPath.toString)
-    }
-    val entries = listGeneration(spark, root, gen, st.tags)
-    // row conservation: a rewrite that lost or duplicated rows must
-    // never commit (the updateMoR/mergeMoR tear posture)
-    val expected = eligible.map(fileLiveRows)
-    if (expected.forall(_.isDefined) && entries.forall(_.rows >= 0)) {
-      val want = expected.flatten.sum; val got = entries.map(_.rows).sum
-      if (want != got) {
-        fs.delete(genPath, true)
-        sys.error(s"optimize($root): rewrite produced $got rows where the " +
-          s"manifest records $want live rows — torn read (non-deterministic " +
-          "source or concurrent mutation); aborting without committing")
-      }
-    }
-    require(entries.nonEmpty || eligible.size < st.files.size,
-      s"optimize would remove every live row of $root — a full-table clear " +
-        "is a rewrite: use write() with the replacement content")
-    val v = st.version + 1
-    commit(fs, root, staged(root, DeltaManifest(v, entries, eligible.map(_.relPath),
-      st.tags + (OpTag -> "rewrite"), None), Seq(gen)))
-    log.info(s"optimize($root): packed ${eligible.size} files " +
-      s"(${liveBytes} bytes) into ${entries.size}; " +
-      s"${st.files.size - eligible.size} carried by reference")
-    v
+    rewrite(spark, root, st, "optimize", eligible, rewriteLayout(root, st, eligible),
+      if (zOrderBy.nonEmpty) Ordered(targetFileMB, zOrderBy, zOrder = true)
+      else Sized(targetFileMB),
+      snapshot = false)
   }
 
+  /** [[optimize]]'s bin-packing scope: files under half the target size
+    * or carrying a live DV, in partitions where packing gains something
+    * (two or more such files, or any DV). */
+  private def packable(files: Seq[FileEntry], targetBytes: Long): Seq[FileEntry] =
+    files.filter(f => f.bytes < targetBytes / 2 || f.dv.nonEmpty)
+      .groupBy(_.partitionPath).valuesIterator
+      .filter(fs0 => fs0.size >= 2 || fs0.exists(_.dv.nonEmpty))
+      .flatten.toSeq
+
+  /** Clustered compaction (the Delta OPTIMIZE ZORDER / Iceberg
+    * sort-order role, linear form): rewrite the live file set
+    * RANGE-PARTITIONED and sorted on `sortCols`, so each output file
+    * covers a DISJOINT slice of the sort key space — after which
+    * [[readWhere]]'s min/max skipping on those columns touches only the
+    * files whose slice intersects the predicate. This is what makes
+    * data skipping effective on UNPARTITIONED tables (and, within each
+    * hive partition, on secondary columns): freshly upserted generations
+    * have overlapping ranges per file; clustering collapses the overlap.
+    *
+    * Same CAS commit discipline as [[compact]]: full snapshot, pointer
+    * advance, tags preserved, orphan generation deleted on a lost race.
+    * Sort is per-output-file (`sortWithinPartitions`), not global — no
+    * single-reducer funnel at any table size; skew in the sort key is
+    * absorbed by the range partitioner's sampling. `zOrder` replaces
+    * the linear multi-column sort with the interleaved Morton key, so
+    * skipping bites on EVERY clustered column, not just the prefix. */
   def cluster(spark: SparkSession, root: String, sortCols: Seq[String],
               targetFileMB: Int = 512,
               zOrder: Boolean = false): Long = {
     require(sortCols.nonEmpty, "cluster: sortCols must be non-empty")
     require(targetFileMB > 0, s"cluster: targetFileMB must be > 0, got $targetFileMB")
-    val fs = fsOf(spark, root)
     val st = head(spark, root)
-    val df = readState(spark, root, st)
-    val bytes = st.files.map(_.bytes).sum
-    val layouts = st.files.map(_.partitionPath.split('/').toSeq
-      .filter(_.nonEmpty).map(_.takeWhile(_ != '='))).distinct
+    val layouts = st.files.map(_.partitionKeys).distinct
     require(layouts.size <= 1,
       s"cluster: inconsistent partition layouts in $root: $layouts")
-    val partKeys = layouts.headOption.getOrElse(Seq.empty)
-    require(sortCols.forall(df.columns.contains),
-      s"cluster: sortCols ${sortCols.filterNot(df.columns.contains)} not in table schema")
-    val targetBytes = targetFileMB * 1024L * 1024L
-    val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val gen = s"gen-${java.util.UUID.randomUUID().toString.take(12)}"
-    val genPath = new Path(root, gen)
-    // range-partition on (partition cols ++ sort cols) so rows of one
-    // hive partition land contiguously and each task's slice of the sort
-    // key is disjoint; the writer then splits tasks by partition dir.
-    // zOrder replaces the linear multi-column sort with the interleaved
-    // Morton key (graft.plans.ZOrder): skipping then bites on EVERY
-    // clustered column, not just the sort prefix — the key is a derived
-    // sort expression only, never written
-    val orderCols: Seq[org.apache.spark.sql.Column] =
-      if (zOrder && sortCols.size > 1)
-        partKeys.map(col) :+ graft.plans.ZOrder.zkey(df, sortCols)
-      else (partKeys ++ sortCols).map(col)
-    // order by LOGICAL names, then project to physical for the write
-    // (a projection preserves within-partition order)
-    val clustered = withMicrosTimestamps(physicalizeDf(
-      df.repartitionByRange(parts, orderCols: _*)
-        .sortWithinPartitions(orderCols: _*), st.tags))
-    val w = clustered.write.mode(SaveMode.ErrorIfExists)
-    (if (partKeys.nonEmpty) w.partitionBy(partKeys: _*) else w)
-      .parquet(genPath.toString)
-    val entries = listGeneration(spark, root, gen, st.tags)
-    commitRewrite(spark, fs, root, st, gen, entries)
+    rewrite(spark, root, st, "cluster", st.files, layouts.headOption.getOrElse(Nil),
+      Ordered(targetFileMB, sortCols, zOrder), snapshot = true)
   }
 
-  /** Shared commit for whole-table rewrites ([[compact]]/[[cluster]]):
-    * full snapshot at version+1 with tags preserved (stream replay
-    * watermark etc.) through [[commit]]. */
-  private def commitRewrite(spark: SparkSession, fs: FileSystem, root: String,
-                            st: State, gen: String, entries: Seq[FileEntry]): Long = {
+  /** The data-identical rewrite behind every maintenance verb: `scope`'s
+    * live rows (deletion vectors folded in, rename/drop mappings
+    * applied) through [[readState]], written by [[writeGeneration]] in
+    * `shape` under `partKeys`, committed as op "rewrite" — which
+    * incremental and change-feed readers skip. A `snapshot` lists the
+    * files outside `scope` plus the new ones; otherwise a delta replaces
+    * `scope`. Refused without committing, its generation deleted: a
+    * result whose footer rows differ from the manifest's live-row counts
+    * (a torn read — non-deterministic source or concurrent mutation),
+    * and one that would leave the table without a live file. A scope
+    * the manifest proves row-less writes nothing. */
+  private def rewrite(spark: SparkSession, root: String, st: State, verb: String,
+                      scope: Seq[FileEntry], partKeys: Seq[String], shape: Shape,
+                      snapshot: Boolean): Long = {
+    val fs = fsOf(spark, root)
+    val bytes = scope.map(_.bytes).sum
+    val expected = scope.map(fileLiveRows)
+    val want = if (expected.forall(_.isDefined)) Some(expected.flatten.sum) else None
+    val (gen, entries) =
+      if (want.contains(0L)) (None, Seq.empty[FileEntry])
+      else {
+        val (g, es) = writeGeneration(readState(spark, root, st.copy(files = scope)),
+          root, partKeys, st.tags, shape, bytes)
+        (Some(g), es)
+      }
+    def refuse(e: RuntimeException): Nothing = {
+      discard(fs, gen.map(new Path(root, _)).toSeq)
+      throw e
+    }
+    val got = entries.map(_.rows).sum
+    if (want.exists(_ != got) && entries.forall(_.rows >= 0))
+      refuse(new RuntimeException(s"$verb($root): rewrite produced $got rows where " +
+        s"the manifest records ${want.get} live rows — torn read (non-deterministic " +
+        "source or concurrent mutation); aborting without committing"))
+    if (entries.isEmpty && scope.size == st.files.size)
+      refuse(new IllegalArgumentException(s"$verb would leave $root without a " +
+        "live file — a full-table clear is a rewrite: use write() with the " +
+        "replacement content"))
     val v = st.version + 1
-    // "rewrite" marks this commit as data-IDENTICAL (same rows, new
-    // files) so incremental readers skip it instead of re-emitting the
-    // whole table
-    val (manifest, sidecar) = mkSnapshot(spark, root, v, entries, st.tags + (OpTag -> "rewrite"))
-    commit(fs, root, staged(root, manifest, Seq(gen), sidecar))
+    val tags = st.tags + (OpTag -> "rewrite")
+    val (manifest, sidecar) =
+      if (snapshot) {
+        val gone = scope.map(_.relPath).toSet
+        mkSnapshot(spark, root, v, st.files.filterNot(f => gone(f.relPath)) ++ entries, tags)
+      } else (DeltaManifest(v, entries, scope.map(_.relPath), tags, None), None)
+    commit(fs, root, staged(root, manifest, gen.toSeq, sidecar))
+    log.info(s"$verb($root): rewrote ${scope.size} files ($bytes bytes) into " +
+      s"${entries.size}; ${st.files.size - scope.size} carried by reference")
+    v
   }
 
   private val StreamBatchTag = "stream_batch"
@@ -5607,31 +5546,6 @@ object ManifestTable {
       }
       .start()
 
-  /** Drop COMMITTED manifests older than the newest `keep` committed
-    * ones and delete generation dirs they referenced that no kept
-    * manifest still references. Sentinel-less corpse manifests never
-    * count toward `keep` (a corpse at the head would otherwise displace
-    * the newest real commit from the kept set — total table loss) and
-    * are never deleted here ([[claimOrRecover]] owns corpse recovery).
-    *
-    * `deleteOrphans = true` additionally removes generation dirs
-    * referenced by NO manifest at all (writers that crashed before their
-    * claim). Only safe when no writer is in flight — an in-flight
-    * writer's freshly written generation is indistinguishable from an
-    * orphan. Returns the number of generation dirs deleted.
-    *
-    * Delta-chain preservation: a kept version may be a delta, so the
-    * retention FLOOR is the newest snapshot at-or-below the oldest kept
-    * version — every manifest from the floor up is retained (the kept
-    * versions resolve through them), and only committed manifests BELOW
-    * the floor are dropped. v1 is always a snapshot, so a floor always
-    * exists. If the `_last_checkpoint` pointer named a dropped version
-    * it is refreshed to the newest retained snapshot. */
-  /** Time-based retention ([[vacuum]] with the knob ops teams actually
-    * set): retain every version committed within `retainMs` of now (by
-    * the manifest file's mtime — best-effort wall clock, floor of one
-    * version always kept), drop the rest. Same chain-preserving
-    * guarantees as [[vacuum]]. */
   /** Manifest integrity check (the fsck role): verify every live file
     * reference against the filesystem — existence and recorded size —
     * resolving through the clone source chain like any read. One
@@ -5715,6 +5629,11 @@ object ManifestTable {
     problems.toDF("relPath", "dir", "problem", "expected_bytes", "actual_bytes")
   }
 
+  /** Time-based retention ([[vacuum]] with the knob ops teams actually
+    * set): retain every version committed within `retainMs` of now (by
+    * the manifest file's mtime — best-effort wall clock, floor of one
+    * version always kept), drop the rest. Same chain-preserving
+    * guarantees as [[vacuum]]. */
   def vacuumRetain(spark: SparkSession, root: String, retainMs: Long,
                    deleteOrphans: Boolean = false,
                    orphanGraceMs: Long = DefaultOrphanGraceMs,
@@ -5737,6 +5656,26 @@ object ManifestTable {
       dryRun)
   }
 
+  /** Drop COMMITTED manifests older than the newest `keep` committed
+    * ones and delete generation dirs they referenced that no kept
+    * manifest still references. Sentinel-less corpse manifests never
+    * count toward `keep` (a corpse at the head would otherwise displace
+    * the newest real commit from the kept set — total table loss) and
+    * are never deleted here ([[claimOrRecover]] owns corpse recovery).
+    *
+    * `deleteOrphans = true` additionally removes generation dirs
+    * referenced by NO manifest at all (writers that crashed before their
+    * claim). Only safe when no writer is in flight — an in-flight
+    * writer's freshly written generation is indistinguishable from an
+    * orphan. Returns the number of generation dirs deleted.
+    *
+    * Delta-chain preservation: a kept version may be a delta, so the
+    * retention FLOOR is the newest snapshot at-or-below the oldest kept
+    * version — every manifest from the floor up is retained (the kept
+    * versions resolve through them), and only committed manifests BELOW
+    * the floor are dropped. v1 is always a snapshot, so a floor always
+    * exists. If the `_last_checkpoint` pointer named a dropped version
+    * it is refreshed to the newest retained snapshot. */
   def vacuum(spark: SparkSession, root: String, keep: Int = 2,
              deleteOrphans: Boolean = false,
              orphanGraceMs: Long = DefaultOrphanGraceMs,

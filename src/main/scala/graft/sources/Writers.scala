@@ -215,7 +215,9 @@ object Writers {
     val fs = p.getFileSystem(hconf)
     val (bytes, nFiles, keys) = scanParquetDir(fs, fs.makeQualified(p))
     val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    sizedRewrite(spark, spark.read.parquet(path), bytes, keys, targetFileMB, tmp.toString)
+    val w = sizedRewrite(spark.read.parquet(path), bytes, keys, targetFileMB)
+      .write.mode(SaveMode.Overwrite)
+    (if (keys.nonEmpty) w.partitionBy(keys: _*) else w).parquet(tmp.toString)
     val out = ManifestTable.listLeafFiles(fs, tmp)
       .count(_.getPath.getName.endsWith(".parquet"))
     val bak = new org.apache.hadoop.fs.Path(path + "__compact_bak")
@@ -264,18 +266,22 @@ object Writers {
     (bytes, nFiles, Option(partKeys).getOrElse(Seq.empty).toSeq)
   }
 
-  /** Rewrite `df` (known to occupy `bytes` on disk, hive-partitioned by
-    * `keys` — possibly empty) into ~targetFileMB files under `out`,
-    * preserving the partition layout. Skew-aware: each partition VALUE is
-    * sized individually. Shared by [[compactParquet]] and
-    * [[ManifestTable.compact]]. */
-  private[sources] def sizedRewrite(spark: SparkSession, df: DataFrame, bytes: Long,
-                                    keys: Seq[String], targetFileMB: Int,
-                                    out: String): Unit = {
+  /** Files for `bytes` of data at ~`targetFileMB` each (at least one). */
+  private[sources] def fileCount(bytes: Long, targetFileMB: Int): Int = {
     val targetBytes = targetFileMB * 1024L * 1024L
-    val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    if (keys.isEmpty)
-      df.repartition(parts).write.mode(SaveMode.Overwrite).parquet(out)
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+  }
+
+  /** `df` (known to occupy `bytes` on disk, hive-partitioned by `keys` —
+    * possibly empty) repartitioned so that writing it with
+    * `partitionBy(keys)` lands ~targetFileMB files. Skew-aware: each
+    * partition VALUE is sized individually. Runs one row-count job when
+    * `keys` is non-empty. Shared by [[compactParquet]] and
+    * [[ManifestTable]]'s generation writer. */
+  private[sources] def sizedRewrite(df: DataFrame, bytes: Long,
+                                    keys: Seq[String], targetFileMB: Int): DataFrame = {
+    val parts = fileCount(bytes, targetFileMB)
+    if (keys.isEmpty) df.repartition(parts)
     else {
       // repartition(parts, keys) would hash each partition VALUE into
       // exactly one task — a skewed partition (one value holding most of
@@ -284,8 +290,10 @@ object Writers {
       // parquet-metadata count), bytes-per-row from the directory total,
       // then a per-value salt spreads big values over ceil(value_bytes /
       // target) files while small values stay at one.
+      val targetBytes = targetFileMB * 1024L * 1024L
       val nonce = graft.core.Cols.nonce // caller columns must survive
       val (rowsC, nfC, saltC) = (s"_rows_$nonce", s"_nf_$nonce", s"_salt_$nonce")
+      val keyCs = keys.indices.map(i => s"_key${i}_$nonce")
       val rowsPerValue = df.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as(rowsC))
       // coalesce: an all-empty-files directory has an EMPTY aggregate,
@@ -293,9 +301,11 @@ object Writers {
       val totalRows = math.max(1L, rowsPerValue
         .agg(coalesce(sum(col(rowsC)), lit(0L))).collect()(0).getLong(0))
       val bytesPerRow = bytes.toDouble / totalRows
-      val sized = rowsPerValue.withColumn(nfC,
-        greatest(lit(1L), ceil(col(rowsC) * bytesPerRow / targetBytes)))
-        .drop(rowsC)
+      // the keys renamed: joining `df` to an aggregate of itself on the
+      // shared attributes would be a trivially true self-join predicate
+      val sized = rowsPerValue.select(keys.zip(keyCs).map { case (k, kc) =>
+        col(k).as(kc) } :+
+        greatest(lit(1L), ceil(col(rowsC) * bytesPerRow / targetBytes)).as(nfC): _*)
       // the salt only spreads rows — any hashable subset of columns will
       // do, and map-typed columns cannot feed xxhash64. Content hashing
       // keeps similar rows co-located (compression), but collapses when
@@ -307,24 +317,20 @@ object Writers {
         .filter(f => !keys.contains(f.name) && hashable(f.dataType))
         .map(f => col(f.name)).toSeq
       val saltSrc = if (hashableCols.isEmpty) {
-        log.warn(s"compact: no hashable non-partition columns for $out — " +
-          "spreading by row id instead of content (file sizing still honored; " +
-          "content locality not preserved)")
+        log.warn(s"compact: no hashable non-partition columns (partitioned by " +
+          s"${keys.mkString(", ")}) — spreading by row id instead of content " +
+          "(file sizing still honored; content locality not preserved)")
         monotonically_increasing_id()
       } else xxhash64(hashableCols: _*)
       // null-safe key equality: a null partition value is a real
       // partition dir (k=__HIVE_DEFAULT_PARTITION__); a plain === join
       // would silently DROP those rows from the rewritten data
-      val cond = keys.map(k => df(k) <=> sized(k)).reduce(_ && _)
-      val joined = keys.foldLeft(df.join(broadcast(sized), cond)) {
-        (d, k) => d.drop(sized(k))
-      }
-      val salted = joined
+      val cond = keys.zip(keyCs).map { case (k, kc) => col(k) <=> col(kc) }.reduce(_ && _)
+      df.join(broadcast(sized), cond).drop(keyCs: _*)
         .withColumn(saltC, pmod(saltSrc, col(nfC)))
         .drop(nfC)
-      salted.repartition(parts, (keys :+ saltC).map(col): _*)
+        .repartition(parts, (keys :+ saltC).map(col): _*)
         .drop(saltC)
-        .write.mode(SaveMode.Overwrite).partitionBy(keys: _*).parquet(out)
     }
   }
 

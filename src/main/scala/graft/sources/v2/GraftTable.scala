@@ -229,13 +229,6 @@ final class GraftScanBuilder(root: String, version: Option[Long],
   private var required: StructType = fullSchema
   private var plannedAgg: Option[GraftAggScan.Planned] = None
 
-  /** Partition-layout columns on which file-level pruning is ROW-exact:
-    * identity partitions give every row of a file the directory's value,
-    * so a string-literal predicate decided per-file never over-keeps.
-    * Empty (nothing fully pushable) under evolved specs (mixed-era
-    * layouts), rename/drop mappings, clone chains, or any live file
-    * missing the column — the conservative states where pruning can
-    * only be advisory. */
   /** The manifest state this builder plans against, resolved ONCE per
     * build: exact-filter classification, the aggregate planner and the
     * batch scan must all see the SAME version — independent re-reads
@@ -252,7 +245,14 @@ final class GraftScanBuilder(root: String, version: Option[Long],
     }
   }
 
-  /** Rename/drop mappings do NOT disqualify: layout columns can never
+  /** Partition-layout columns on which file-level pruning is ROW-exact:
+    * identity partitions give every row of a file the directory's value,
+    * so a string-literal predicate decided per-file never over-keeps.
+    * Empty (nothing fully pushable) under evolved specs (mixed-era
+    * layouts) or when any live file misses the column — the states where
+    * pruning can only be advisory.
+    *
+    * Rename/drop mappings do NOT disqualify: layout columns can never
     * be renamed or dropped ([[ManifestTable.schemaEvoCheck]] refuses
     * hive partition columns), so their names here are already the
     * in-path physical ones. Clone chains don't either — the per-file

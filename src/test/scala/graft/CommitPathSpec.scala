@@ -13,7 +13,8 @@ import graft.sources.ManifestTable
 /** The manifest commit path end to end: every committing mutator leaves
   * the table directory exactly as it found it when its claim is lost,
   * merge-on-read DML applies in partitions whose directory names need
-  * escaping, and merges accept typed partition columns. */
+  * escaping, merges accept typed partition columns, and no maintenance
+  * rewrite commits rows the manifest does not account for. */
 class CommitPathSpec extends SparkSpec {
   import spark.implicits._
 
@@ -109,6 +110,45 @@ class CommitPathSpec extends SparkSpec {
       }
       assert(leaks.isEmpty, leaks.mkString("\n"))
     } finally spark.conf.unset(ManifestTable.ColumnarSnapshotThresholdKey)
+  }
+
+  test("every maintenance rewrite refuses a result whose rows differ from the manifest's") {
+    val cases: Seq[(String, String => Any)] = Seq(
+      ("compact", r => ManifestTable.compact(spark, r)),
+      ("compactSmallFiles", r => ManifestTable.compactSmallFiles(spark, r)),
+      ("optimize", r => ManifestTable.optimize(spark, r)),
+      ("cluster", r => ManifestTable.cluster(spark, r, Seq("k"))),
+      ("materializeDeletes", r => ManifestTable.materializeDeletes(spark, r)))
+    val faults = cases.flatMap { case (name, rewrite) =>
+      val root = tmp()
+      ManifestTable.createEmpty(spark, root, schema, Seq("p"))
+      // two small files per partition, and a deletion vector on one of them
+      ManifestTable.append(spark, rows(Seq(1L, 2L), "a", 1L).union(rows(Seq(3L), "b", 1L)), root)
+      ManifestTable.append(spark, rows(Seq(4L), "a", 2L).union(rows(Seq(5L), "b", 2L)), root)
+      ManifestTable.deleteMoR(spark, root, col("k") === 1L)
+      val st = ManifestTable.current(spark, root).get
+      // the DV'd file, overwritten in place by one of the same schema
+      // holding one extra row: the manifest now undercounts its rows
+      val torn = Paths.get(root, st.files.find(_.dv.nonEmpty).get.relPath)
+      val stage = Files.createTempDirectory("graft-torn").toString + "/f"
+      Seq((1L, 1L), (2L, 1L), (6L, 1L)).toDF("k", "v").coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet"))
+        .get.toPath
+      Files.copy(part, torn, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.deleteIfExists(torn.resolveSibling(s".${torn.getFileName}.crc"))
+      val before = listing(root)
+      scala.util.Try(rewrite(root)) match {
+        case scala.util.Success(_) => Some(s"$name committed the torn rewrite")
+        case scala.util.Failure(e) =>
+          assert(e.getMessage.contains("the manifest records"), s"$name: $e")
+          assert(ManifestTable.currentVersion(spark, root).contains(st.version), name)
+          val after = listing(root)
+          if (after == before) None
+          else Some(s"$name left ${(after -- before).toSeq.sorted} and removed " +
+            s"${(before -- after).toSeq.sorted}")
+      }
+    }
+    assert(faults.isEmpty, faults.mkString("\n"))
   }
 
   test("a claim that fails after its manifest landed keeps the data; one that fails before drops it") {

@@ -1453,6 +1453,7 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("writer-seeded schema memo: derived read-back schema equals inference across layouts") {
+    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
     // the writer seeds the memo with readBackSchema(writtenFrame, parts);
     // this pins derivation ≡ the inference-off construction genFrame
@@ -1480,6 +1481,30 @@ class ManifestTableSpec extends SparkSpec {
       if (Seq("day", "b").contains(f.name)) f.copy(dataType = StringType) else f))
     assert(ManifestTable.readBackSchema(written2, Seq("day", "b")) ==
       inferred(genDirOf(part)))
+    // every maintenance rewrite writes through the same writer: its new
+    // generations are seeded by the time the commit returns
+    def gens(root: String): Set[String] =
+      ManifestTable.current(spark, root).get.files.map(_.relPath.takeWhile(_ != '/')).toSet
+    val rewrites: Seq[(String, String => Any)] = Seq(
+      ("compact", r => ManifestTable.compact(spark, r)),
+      ("compactSmallFiles", r => ManifestTable.compactSmallFiles(spark, r)),
+      ("optimize", r => ManifestTable.optimize(spark, r)),
+      ("optimize ZORDER", r => ManifestTable.optimize(spark, r, zOrderBy = Seq("k", "v"))),
+      ("cluster", r => ManifestTable.cluster(spark, r, Seq("k"))))
+    for ((name, rewrite) <- rewrites; parts <- Seq(Nil, Seq("day", "b"))) {
+      val root = tmp() + "/rw"
+      ManifestTable.write(df2, root, parts)
+      // a second file in the same partition: every rewrite has work to do
+      ManifestTable.append(spark, df2.withColumn("k", col("k") + 1), root)
+      val before = gens(root)
+      rewrite(root)
+      val added = gens(root) -- before
+      assert(added.size == 1, s"$name $parts: $added")
+      val genDir = root + "/" + added.head
+      val memo = graft.core.SchemaMemo.get(spark, genDir)
+      assert(memo != null, s"$name $parts: generation $genDir not seeded")
+      assert(memo == inferred(genDir), s"$name $parts")
+    }
   }
 
   test("writer seed declines a case-mismatched partition spec") {
